@@ -161,3 +161,46 @@ def test_changed_names_skips_test_and_script_diffs(monkeypatch):
         ),
     )
     assert co._changed_names(_fake_queries("x"), "HEAD") == set()
+
+
+# --- one size gate (operators/sizing.py owns the budget) -------------
+
+_REMOVED_GATES = {
+    "BCAST_MAX_ROWS", "BCAST_MAX", "LLOYD_LOCAL_MAX", "PQ_LOCAL_MAX",
+}
+
+
+def test_size_budget_is_assigned_only_in_sizing():
+    """No module but operators/sizing.py may assign a size-budget name,
+    and none may import a removed one, so a private copy of the gate
+    cannot slip back in."""
+    import ast
+    import pathlib
+    import re
+
+    budget = re.compile(r"BCAST_MAX|_LOCAL_MAX|LOCAL_BYTES")
+    root = pathlib.Path(__file__).resolve().parents[1] / "zoom_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+                names = [n for n in names if n in _REMOVED_GATES]
+            elif isinstance(
+                node, (ast.Assign, ast.AnnAssign, ast.AugAssign, ast.NamedExpr)
+            ):
+                targets = getattr(node, "targets", None) or [node.target]
+                names = [
+                    n.id if isinstance(n, ast.Name) else n.attr
+                    for t in targets
+                    for n in ast.walk(t)
+                    if isinstance(n, (ast.Name, ast.Attribute))
+                ]
+                if rel == "operators/sizing.py":
+                    names = []
+                names = [n for n in names if budget.search(n)]
+            else:
+                continue
+            bad += [f"{rel}:{node.lineno} {n}" for n in names]
+    assert not bad, f"size budget defined outside operators/sizing.py: {bad}"

@@ -682,27 +682,3 @@ def test_nation_rank_stability_matches_pandas(spark):
     assert r["footrule"] == sum(abs(x) for x in d2)
     assert r["max_shift"] == max(abs(x) for x in d2)
     assert abs(r["spearman_rho"] - rho) < 1e-6
-
-
-def test_int_lloyd_local_path_matches_distributed(spark):
-    """r14: the gated driver-local numpy Lloyd path must be BITWISE
-    identical to the distributed per-iteration path (same md5 seeds,
-    same first-minimum tie-break, same IEEE mean division + shared
-    floor(m+0.5) snap, empty cells dropped without relabel)."""
-    import zoom_spark.similarity.kmeans as km
-    from tests.conftest import SF_DIR
-    from zoom_spark.io import load_table
-    from zoom_spark.similarity.kmeans import int_lloyd_fit, int_quantize
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    base = int_quantize(emb, "embedding", "vec_id", 1_000_000).localCheckpoint(
-        eager=False
-    )
-    local = int_lloyd_fit(base, k=8, iters=3)
-    prev = km.LLOYD_LOCAL_MAX
-    try:
-        km.LLOYD_LOCAL_MAX = -1  # force the distributed path
-        dist = int_lloyd_fit(base, k=8, iters=3)
-    finally:
-        km.LLOYD_LOCAL_MAX = prev
-    assert local == dist

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zoom_spark.operators.sizing import frame_partitions
+from zoom_spark.operators.sizing import broadcaster, frame_partitions
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -46,19 +46,7 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def _maybe_bcast(df: DataFrame, small: bool) -> DataFrame:
-    """Broadcast hint for the node-sized per-round min tables. The
-    star frames are checkpointed RDD scans with unknown stats, so
-    without the hint every round sort-merge-joins the edge frame
-    against a table one groupBy just proved is node-sized; ``small``
-    is derived from the COUNTED edge total each round (checksum rides
-    the convergence check, so the gate is free) and fails closed at
-    billion-node scale (r13 A/B at sf0.1: canonical_ids_chained
-    6.3 s shuffle vs 4.3 s broadcast, identical results)."""
-    return F.broadcast(df) if small else df
-
-
-def _large_star(edges: DataFrame, n_parts: int, small: bool = False) -> DataFrame:
+def _large_star(edges: DataFrame, n_parts: int, bcast) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to
     min(N(u) ∪ {u}).  Emitted edges always point high -> low, so the
     component minimum only spreads downhill."""
@@ -69,7 +57,7 @@ def _large_star(edges: DataFrame, n_parts: int, small: bool = False) -> DataFram
         .select("src", F.least("src", "mn").alias("mn"))
     )
     return (
-        sym.join(_maybe_bcast(mins, small), "src")
+        sym.join(bcast(mins), "src")
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
         .where(F.col("src") != F.col("dst"))
@@ -78,7 +66,7 @@ def _large_star(edges: DataFrame, n_parts: int, small: bool = False) -> DataFram
     )
 
 
-def _small_star(edges: DataFrame, n_parts: int, small: bool = False) -> DataFrame:
+def _small_star(edges: DataFrame, n_parts: int, bcast) -> DataFrame:
     """Orient every edge (max, min); for each center u connect u and
     all its (smaller) neighbors to the neighborhood minimum."""
     oriented = edges.select(
@@ -86,7 +74,7 @@ def _small_star(edges: DataFrame, n_parts: int, small: bool = False) -> DataFram
         F.least("src", "dst").alias("dst"),
     ).where(F.col("src") != F.col("dst"))
     mins = oriented.groupBy("src").agg(F.min("dst").alias("mn"))
-    nbrs = oriented.join(_maybe_bcast(mins, small), "src").select(
+    nbrs = oriented.join(bcast(mins), "src").select(
         F.col("dst").alias("src"), F.col("mn").alias("dst")
     )
     centers = mins.select("src", F.col("mn").alias("dst"))
@@ -132,15 +120,19 @@ def _star_contraction(
         edges = edges.repartition(n_parts, "src").localCheckpoint(eager=False)
     rounds = 0
     converged = False
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
-
     for _ in range(max_iter):
         rounds += 1
-        # mins tables hold <= |V| <= 2 * edge-count rows; the checksum
-        # count from the previous round gates the broadcast for free
-        small = 2 * prev[0] <= BCAST_MAX_ROWS
+        # Broadcast hint for the node-sized per-round (src, mn) min
+        # tables: the star frames are checkpointed RDD scans with
+        # unknown stats, so without the hint every round sort-merge-
+        # joins the edge frame against a table one groupBy just proved
+        # is node-sized. The tables hold <= |V| <= 2 * edge-count rows,
+        # so the checksum count from the previous round gates the hint
+        # for free (r13 A/B at sf0.1: canonical_ids_chained 6.3 s
+        # shuffle vs 4.3 s broadcast, identical results).
+        bcast = broadcaster(2 * prev[0], 16)
         edges = _small_star(
-            _large_star(edges, n_parts, small), n_parts, small
+            _large_star(edges, n_parts, bcast), n_parts, bcast
         ).localCheckpoint(eager=False)
         cur = _checksum(edges)
         if cur == prev:

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zoom_spark.operators.sizing import broadcaster
+
 ALS_K = 8
 ALS_LAMBDA = 0.1
 
@@ -78,11 +80,9 @@ def solve_side(
     the full ratings frame against an entity-sized factor table; a
     counted row bound lets us broadcast the factor side instead and
     leave the ratings frame unshuffled. Fails closed to the shuffle
-    join past BCAST_MAX_ROWS (billions of entities)."""
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
-
-    if fixed_rows is not None and fixed_rows <= BCAST_MAX_ROWS:
-        fixed = F.broadcast(fixed)
+    join past the ``sizing`` budget (an id plus k doubles per row)."""
+    if fixed_rows is not None:
+        fixed = broadcaster(fixed_rows, 8 + 8 * k)(fixed)
     joined = ratings.join(fixed, on=fixed_col).select(
         solve_col, rating_col, "vec"
     )
@@ -159,10 +159,8 @@ def predict_rmse(
     baseline). JVM-side dot product (zip_with + aggregate).
 
     ``user_rows`` / ``item_rows``: counted factor-frame sizes; same
-    gated-broadcast contract as solve_side (fails closed past
-    BCAST_MAX_ROWS)."""
+    gated-broadcast contract as solve_side, at the default rank."""
     from zoom_spark.functions.vectors import dot
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
 
     if user_fac is None:
         scored = ratings.select(
@@ -171,10 +169,10 @@ def predict_rmse(
     else:
         uf = user_fac.withColumnRenamed("vec", "uvec")
         vf = item_fac.withColumnRenamed("vec", "ivec")
-        if user_rows is not None and user_rows <= BCAST_MAX_ROWS:
-            uf = F.broadcast(uf)
-        if item_rows is not None and item_rows <= BCAST_MAX_ROWS:
-            vf = F.broadcast(vf)
+        if user_rows is not None:
+            uf = broadcaster(user_rows, 8 + 8 * ALS_K)(uf)
+        if item_rows is not None:
+            vf = broadcaster(item_rows, 8 + 8 * ALS_K)(vf)
         scored = (
             ratings.join(uf, on=user_col)
             .join(vf, on=item_col)

@@ -17,23 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zoom_spark.operators.sizing import frame_partitions
+from zoom_spark.operators.sizing import broadcaster, fits, frame_partitions
 
 # ord key = degree * ORD_BASE + node_id: a single BIGINT total order
 # (degree-major, id tie-break) that both sides of every comparison
 # share. Node ids must stay below ORD_BASE.
 ORD_BASE = 1_000_000_000
-
-# Row budget for broadcasting node-sized per-round frames (scores,
-# labels, frontiers) inside iterative loops. Checkpointed loop frames
-# scan as ExistingRDD with unknown stats, so Catalyst/AQE never
-# auto-broadcasts them and every round re-shuffles the full edge
-# frame for a sort-merge join; an explicit hint removes that exchange.
-# Gated on a COUNTED upper bound (never an estimate): a few million
-# (key, value) rows is tens of MB framed — comfortably inside executor
-# memory — while at 100 TB (billions of nodes) the gate fails closed
-# and the loop keeps the plain shuffle join it has today.
-BCAST_MAX_ROWS = 4_000_000
 
 
 def orient_edges(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -331,11 +320,7 @@ def label_propagation_communities(
     # hint every round re-shuffles the edge frame for the vote join
     # (r13 A/B at sf0.1: community_labels 8.2 s shuffle vs 5.0 s
     # broadcast, identical results); fails closed at billion-node scale.
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if n_sym <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bcast = broadcaster(n_sym, 16)  # (node, community)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -387,7 +372,7 @@ def hits(
     raw score frame fans out to 2 consumers per half-step, so unlike
     pagerank's pure chain this loop MUST checkpoint). The node-sized
     score frames are broadcast into the edge join when the counted
-    edge total bounds them under ``BCAST_MAX_ROWS`` — checkpointed
+    edge total bounds them inside the ``sizing`` budget — checkpointed
     frames scan with unknown stats, so without the hint every
     half-step re-shuffles the edge frame (r13 A/B at sf0.1: 7.0 s
     shuffle vs 5.2 s broadcast, identical results).
@@ -417,16 +402,12 @@ def hits(
     )
     # Each score frame holds one row per distinct hub/auth node, so
     # n_edges bounds both row counts — one already-paid count gates the
-    # per-round broadcast hints without an extra job (see BCAST_MAX_ROWS;
-    # the score frames themselves must stay checkpointed because each
+    # per-round broadcast hints without an extra job (see sizing; the
+    # score frames themselves must stay checkpointed because each
     # half-step's raw frame fans out to 2 consumers: the L2 normalizer
     # and the next join — a chain-style uncheckpointed loop would
     # duplicate every prior round's subplan 2x per round).
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if n_edges <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bcast = broadcaster(n_edges, 16)  # (node, score)
     auths = (
         e.select(F.col("auth").alias("node")).distinct().withColumn("a", F.lit(1.0))
     )
@@ -547,7 +528,8 @@ def k_truss(
     are one 2-long aggregate per round. Deterministic regardless of
     partitioning (support counting is exact). ``assume_deduped=True``
     skips the defensive distinct (a full edge shuffle) for callers
-    whose edge build already guarantees distinct normalized pairs."""
+    whose edge build already guarantees distinct normalized pairs.
+    Raises ValueError if a node id lies outside [0, 2^31)."""
     cur = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not assume_deduped:
         cur = cur.distinct()
@@ -579,9 +561,9 @@ def k_truss(
         )
     )
     # r14: every loop-state frame keys edges by ONE packed BIGINT
-    # _ek = u * 2^31 + v instead of the (u, v) pair. Node ids are
-    # < ORD_BASE (1e9 < 2^31) by this module's contract, so the packing
-    # is collision-free and order-exact; it halves the bytes scanned
+    # _ek = u * 2^31 + v instead of the (u, v) pair. Node ids in
+    # [0, 2^31) (checked on the up-front edge aggregate below) make the
+    # packing collision-free and order-exact; it halves the bytes scanned
     # and hash-probed by the per-round triangle flagging (measured on
     # the 1.88M-triangle sf0.1 co-purchase graph: 0.67 s -> 0.25 s per
     # flag pass). tri carries (e1, e2, e3); u/v re-emerge only in the
@@ -614,20 +596,27 @@ def k_truss(
         )
         .localCheckpoint(eager=False)
     )
-    BCAST_MAX = 2_000_000  # rows of (u, v, *) kept broadcastable
-    # One up-front edge count (it materializes the sup0 checkpoint the
-    # first peel round would otherwise materialize — no extra pass).
-    # BOTH loop-state frames are keyed by edge — d_cum holds dead
-    # edges, dec_cum is groupBy(u, v)-compacted — so each is provably
-    # <= n_edges rows. When the whole edge set fits the broadcast
-    # budget, every per-round broadcast gate is decided HERE and the
-    # per-round dec_cum.count() jobs (r13: one full tri-scan job per
-    # round, HALF the peel cost) disappear: the lazy checkpoints chain
-    # into the next round's batch.count(). Past the budget, the loop
-    # keeps the r13 shape exactly (counted gates + giant-cascade
-    # compaction) — fails closed at 100 TB.
-    n_edges = sup0.count()
-    edges_bcastable = n_edges <= BCAST_MAX
+    # One up-front aggregate over the edge list. BOTH loop-state frames
+    # are keyed by edge — d_cum holds dead edges, dec_cum is
+    # groupBy(_ek)-compacted — so each is provably <= n_edges rows of
+    # (_ek, long). When the whole edge set fits the broadcast budget,
+    # every per-round broadcast gate is decided HERE and the per-round
+    # dec_cum.count() jobs (r13: one full tri-scan job per round, HALF
+    # the peel cost) disappear: the lazy checkpoints chain into the
+    # next round's batch.count(). Past the budget, the loop keeps the
+    # r13 shape exactly (counted gates + giant-cascade compaction) —
+    # fails closed at 100 TB. The same job reads the id range the _ek
+    # packing needs; an id outside it would silently alias two edges.
+    n_edges, lo, hi = cur.agg(
+        F.count("*"),
+        F.least(F.min("u"), F.min("v")),
+        F.greatest(F.max("u"), F.max("v")),
+    ).first()
+    if n_edges and not (0 <= lo and hi < _PACK):
+        raise ValueError(
+            f"k_truss node ids must lie in [0, 2^31), got [{lo}, {hi}]"
+        )
+    edges_bcastable = fits(n_edges, 16)
 
     def _sup_now(base, dec_cum, small):
         """Current support = frozen base support minus accumulated
@@ -670,9 +659,9 @@ def k_truss(
         # "no alive positive-support edge is sub-threshold".
         batch = (
             _not_dead(
-                _sup_now(sup0, dec_cum, n_dec <= BCAST_MAX),
+                _sup_now(sup0, dec_cum, fits(n_dec, 16)),
                 d_cum,
-                n_dead <= BCAST_MAX,
+                fits(n_dead, 16),
             )
             .where((F.col("supn") < k - 2) & (F.col("supn") > 0))
             .select("_ek", F.lit(rnd).alias("died"))
@@ -687,7 +676,7 @@ def k_truss(
             else d_cum.unionByName(batch).localCheckpoint(eager=False)
         )
         n_dead += n_active
-        small = n_dead <= BCAST_MAX
+        small = fits(n_dead, 16)
         flagged = tri
         for i in (1, 2, 3):
             d_i = d_cum.select(
@@ -739,7 +728,7 @@ def k_truss(
         # materializes the checkpoint this round would force anyway on
         # first reuse; the count gates next round's broadcast hints
         n_dec = dec_cum.count()
-        if not small or n_dec > BCAST_MAX:
+        if not small or not fits(n_dec, 16):
             # giant-cascade compaction (the 100 TB regime where the
             # peeled set stops being model-sized): fold decrements into
             # a fresh base support, shrink T to live triangles, reset
@@ -764,7 +753,7 @@ def k_truss(
     u_type = cur.schema["u"].dataType.simpleString()
     v_type = cur.schema["v"].dataType.simpleString()
     return (
-        _sup_now(sup0, dec_cum, n_dec <= BCAST_MAX)
+        _sup_now(sup0, dec_cum, fits(n_dec, 16))
         .where(F.col("supn") >= k - 2)
         .select(
             # exact integer unpack (DIV, not fp division — packed keys

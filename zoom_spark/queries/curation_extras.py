@@ -430,7 +430,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production contract
     n_probe = 3
     cents = int_lloyd_fit(
-        base, k=k, iters=HNA_ITERS, n_rows=n,
+        base, k=k, iters=HNA_ITERS,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", HNA_QSCALE),
     )
     dotl = lambda u, v: F.aggregate(  # noqa: E731
@@ -501,15 +501,16 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Gated broadcasts (the already-paid n count): nv and qv are
     # vector-corpus-sized but checkpoint-derived (unknown stats), so the
     # planner sort-merge-joined the 3*N^1.5 candidate stream against
-    # them — the wrong side to shuffle. Fails closed past BCAST_MAX_ROWS.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # them — the wrong side to shuffle. Fails closed past the sizing
+    # budget: a row is four scalars plus the int vector, as wide as
+    # the fitted centroids.
+    from zoom_spark.operators.sizing import broadcaster
 
-    nv_j = F.broadcast(nv) if n <= BCAST_MAX_ROWS else nv
-    qv_j = F.broadcast(qv) if n <= BCAST_MAX_ROWS else qv
+    bc = broadcaster(n, 32 + 8 * (len(cents[0][1]) if cents else 0))
     cand = (
-        probes.join(nv_j, on="cell")
+        probes.join(bc(nv), on="cell")
         .where(F.col("q_id") != F.col("id"))
-        .join(qv_j, on="q_id")
+        .join(bc(qv), on="q_id")
         .where(F.col("q_label") != F.col("label"))
         .select(
             F.col("q_id").alias("vec_id"),

@@ -50,7 +50,7 @@ def als_one_sweep_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # als.py): each count materializes a checkpoint the next stage needs
     # anyway, and an entity-sized factor table beats sort-merge-joining
     # the full ratings frame three times per sweep. Fails closed past
-    # BCAST_MAX_ROWS.
+    # the sizing budget.
     n_items = ifac0.count()
     ufac1 = solve_side(
         ratings, ifac0, "u", "i", fixed_rows=n_items

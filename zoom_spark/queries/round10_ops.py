@@ -1322,14 +1322,10 @@ def morans_i_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort-merge-joined the full edge frame against it twice. The count
     # materializes the checkpoint the nodes agg reads anyway; BIGINT
     # moments are summation-order exact, so the plan change cannot move
-    # the result. Fails closed past BCAST_MAX_ROWS.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # the result. Fails closed past the sizing budget.
+    from zoom_spark.operators.sizing import broadcaster
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if x.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcaster(x.count(), 16)  # (node, x)
     xu = x.select(F.col("node").alias("u"), F.col("x").alias("xu"))
     xv = x.select(F.col("node").alias("v"), F.col("x").alias("xv"))
     edges = (
@@ -2025,13 +2021,9 @@ def katz_centrality_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Past the row budget the gate fails closed to today's shuffle
     # join; p must stay checkpointed — each round's frame fans out to
     # the next join AND its path_cols leg.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcaster
 
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if e.count() <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bcast = broadcaster(e.count(), 16)  # (v, p)
     p = e.select(F.col("u").alias("node")).distinct().withColumn(
         "p", F.lit(1).cast("long")
     )
@@ -2161,13 +2153,9 @@ def gearys_c_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Same gated broadcast as morans_i_copurchase: node-sized attribute
     # table vs the full edge frame, BIGINT-exact sums, fails closed.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcaster
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if x.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcaster(x.count(), 16)  # (node, x)
     xu = x.select(F.col("node").alias("u"), F.col("x").alias("xu"))
     xv = x.select(F.col("node").alias("v"), F.col("x").alias("xv"))
     edges = (

@@ -7638,13 +7638,9 @@ def luby_maximal_independent_set(
     # 5.65 s shuffle vs 5.15 s broadcast, identical results); fails
     # closed to the shuffle join at billion-node scale.
     n_vertices = v.count()
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcaster
 
-    bc = (
-        (lambda df: F.broadcast(df))
-        if n_vertices <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bc = broadcaster(n_vertices, 16)  # (x, p) pairs
     e = (
         sup.join(
             bc(prio.select(F.col("x").alias("xu"), F.col("p").alias("pu_"))),

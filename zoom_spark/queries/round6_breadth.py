@@ -95,7 +95,7 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     from zoom_spark.io import spread_scan
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcaster
 
     # spread before the checkpoint so every consumer reads >= cores
     # cached splits (the distinct's tiny post-AQE partitioning otherwise
@@ -107,11 +107,10 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     # One counted gate for every node/edge-sized broadcast below: the
     # count materializes the checkpoint the next job needs anyway.
-    # |deg|, |q| <= nodes <= n_nbr; |e1|, |adj| <= n_nbr. Past
-    # BCAST_MAX_ROWS everything falls back to today's shuffle joins.
-    n_nbr = nbr.count()
-    small = n_nbr <= BCAST_MAX_ROWS
-    bc = (lambda d: F.broadcast(d)) if small else (lambda d: d)
+    # |deg|, |q| <= nodes <= n_nbr; |e1|, |adj| <= n_nbr, and e1w's
+    # (z, a, w) is the widest row. Past the budget everything falls
+    # back to today's shuffle joins.
+    bc = broadcaster(nbr.count(), 24)
     deg = nbr.groupBy("z").agg(F.count("*").alias("d")).where(F.col("d") >= 2)
     q = (
         nbr.select("x")

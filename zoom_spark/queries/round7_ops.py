@@ -3176,20 +3176,19 @@ def suffix_array_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary (map-side partial distinct shrinks the exchange to
     # vocabulary size), broadcast-joined back — the join-back side is
     # vocabulary-sized and the count riding the offsets collect gates
-    # the broadcast for free (fails closed past BCAST_MAX_ROWS).
+    # the broadcast for free (fails closed past the sizing budget).
     # n_classes accumulates the class counts (free: they ride the
     # offsets collects) for the Manber-Myers early exit below; the
     # oracle's fixed-round replay reaches the identical fixpoint
     # because post-stability rounds are provably no-ops.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcaster
 
     n_classes: list = []
     vocab = global_row_number(
         tok.select("w").distinct(), ["w"], out_col="r",
         count_out=n_classes,
     )
-    if n_classes[-1] <= BCAST_MAX_ROWS:
-        vocab = F.broadcast(vocab)
+    vocab = broadcaster(n_classes[-1], 24)(vocab)  # (w, r)
     cur = tok.join(vocab, on="w").select("doc_id", "pos", "r")
     # rounds beyond ceil(log2(longest doc)) are no-ops (every suffix
     # pair already distinguishable), so run only the binding ones —

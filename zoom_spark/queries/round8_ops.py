@@ -2148,14 +2148,10 @@ def harmonic_centrality_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for a sort-merge join (r13 A/B at sf0.1: 10.5 s shuffle vs
     # 5.4-7.6 s broadcast, identical results); past the budget —
     # the billion-node regime — the gate fails closed and the rounds
-    # keep today's shuffle join (operators/graph.BCAST_MAX_ROWS).
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # keep today's shuffle join (operators/sizing.py).
+    from zoom_spark.operators.sizing import broadcaster
 
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if HC_SEEDS * nodes.count() <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bcast = broadcaster(HC_SEEDS * nodes.count(), 24)  # (s, node, dist)
     d = F.broadcast(seeds).select(
         "s", F.col("s").alias("node"), F.lit(0).alias("dist")
     ).localCheckpoint(eager=False)

@@ -1130,13 +1130,9 @@ def louvain_moves_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join (r13 A/B at sf0.1: 12.2 s shuffle vs 7.5 s broadcast,
     # identical results); past the budget the gate fails closed and
     # the loop keeps today's shuffle joins.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcaster
 
-    bc = (
-        (lambda df: F.broadcast(df))
-        if 2 * m <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bc = broadcaster(2 * m, 16)  # (node, value) pairs
     lab = deg.select("node", F.col("node").alias("community"))
     for _ in range(LOUVAIN_ROUNDS):
         tot = (

@@ -703,14 +703,6 @@ def _knn_pq_oracle_sql() -> str:
 # codes frame — and on a hit the final encode pass still runs.
 _PQ_TRAIN_CACHE: dict[tuple, list[tuple[int, int, list[int]]]] = {}
 
-# Row budget for the driver-local PQ training path (subvector rows =
-# N x PQ_M): the collect is a few MB at the bound — the same
-# model-artifact size class as the per-iteration codebook collects the
-# distributed path already does. Past it, the iterative distributed
-# trainer runs unchanged (fails closed at 100 TB).
-PQ_LOCAL_MAX = 400_000
-
-
 def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = None):
     """Train all PQ_M integer codebooks at once over a (vec_id, sub,
     dd, x) frame (seeds: the PQ_CODES smallest md5(vec_id) rows of
@@ -788,63 +780,41 @@ def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = Non
             codes = assign_frame(cb).select("vec_id", "sub", "cell")
             return codes.localCheckpoint(eager=False), cent_frame(cb)
 
-    # r14: a model-sized subvector frame (N x PQ_M rows; the gate
-    # fails closed at scale) trains faster with ONE collect + numpy
-    # than with PQ_ITERS sequential Spark jobs (each assign + M-step
-    # job paid ~1 s of scheduler + interpreted-HOF latency at sf0.1).
-    # Bitwise-identical arithmetic: int64 dots are exact, np.argmin
-    # takes the FIRST minimum (= the lowest cell id over the sorted
-    # cell list), seeds order by the same (md5(str(vec_id)), vec_id)
-    # key, and the M-step divides the double-cast exact int sum by the
-    # count in the same IEEE division before the shared floor(m+0.5).
-    n_sv = svec.count()
-    if n_sv <= PQ_LOCAL_MAX:
-        import hashlib as _hashlib
-        import math as _math
+    # r14: a model-sized subvector frame (N x PQ_M rows of (vec_id,
+    # sub, v8); the gate fails closed at scale) trains faster with ONE
+    # Arrow collect + numpy than with PQ_ITERS sequential Spark jobs
+    # (each assign + M-step job paid ~1 s of scheduler + interpreted-
+    # HOF latency at sf0.1). Each subspace runs the shared int-Lloyd
+    # replay (kmeans.int_lloyd_local, bitwise identical to the
+    # distributed loop) from the same md5-ranked seed vectors.
+    from zoom_spark.operators.sizing import fits
 
+    if fits(svec.count(), 16 + 8 * PQ_SUBDIM):
         import numpy as np
 
-        sv_rows = svec.collect()
-        vec_ids = sorted({int(r["vec_id"]) for r in sv_rows})
-        seed_ids = sorted(
-            vec_ids,
-            key=lambda i: (_hashlib.md5(str(i).encode()).hexdigest(), i),
-        )[:PQ_CODES]
-        cell_of = {vid: i for i, vid in enumerate(seed_ids)}
+        from zoom_spark.similarity.kmeans import (
+            int_lloyd_local,
+            int_matrix,
+            md5_seed_order,
+        )
+
+        t = svec.toArrow()
+        vec_ids = t.column("vec_id").to_numpy()
+        subs = t.column("sub").to_numpy()
+        V = int_matrix(t.column("v8"))
+        uniq = sorted(set(vec_ids.tolist()))
+        seed_ids = [uniq[i] for i in md5_seed_order(uniq)[:PQ_CODES]]
         cb = {}
-        for r in sv_rows:
-            vid = int(r["vec_id"])
-            if vid in cell_of:
-                cb[(int(r["sub"]), cell_of[vid])] = [
-                    int(x) for x in r["v8"]
-                ]
-        subs = sorted({int(r["sub"]) for r in sv_rows})
-        mats = {
-            s: np.asarray(
-                [r["v8"] for r in sv_rows if int(r["sub"]) == s],
-                dtype=np.int64,
-            )
-            for s in subs
-        }
-        for _ in range(PQ_ITERS):
-            new_cb: dict[tuple[int, int], list[int]] = {}
-            for s in subs:
-                cells = sorted(c for s2, c in cb if s2 == s)
-                C = np.asarray([cb[(s, c)] for c in cells], dtype=np.int64)
-                X = mats[s]
-                scores = -2 * (X @ C.T) + (C * C).sum(axis=1)
-                idx = np.argmin(scores, axis=1)
-                for j, c in enumerate(cells):
-                    mask = idx == j
-                    n = int(mask.sum())
-                    if n == 0:
-                        continue
-                    sums = X[mask].sum(axis=0)
-                    new_cb[(s, c)] = [
-                        int(_math.floor(float(int(x)) / n + 0.5))
-                        for x in sums
-                    ]
-            cb = new_cb
+        for sub in sorted(set(subs.tolist())):
+            rows = np.flatnonzero(subs == sub)
+            at = {int(vec_ids[r]): r for r in rows}
+            seeds = [
+                (c, [int(x) for x in V[at[vid]]])
+                for c, vid in enumerate(seed_ids)
+                if vid in at
+            ]
+            for c, vec in int_lloyd_local(V[rows], seeds, PQ_ITERS):
+                cb[(sub, c)] = vec
     else:
         # seeds: the PQ_CODES smallest (md5(vec_id), vec_id) ids,
         # cell = 0-based md5 rank — identical to the oracle's pseed CTE

@@ -991,23 +991,27 @@ def logreg_purchase_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         n = feats.count()
         w0 = w1 = w2 = 0.0
-        if n <= 200_000:
+        from zoom_spark.operators.sizing import fits
+
+        if fits(n, 24):
             # r14: the z-scored feature frame is MODEL-SIZED (3 doubles
             # per user; the counted gate fails closed at scale), so the
-            # 20 GD aggregates + the accuracy pass run on ONE collect in
-            # numpy instead of 21 sequential Spark jobs over the cached
-            # frame (the jobs were pure scheduler latency at sf0.1 —
-            # ~3 s for ~10k rows). Value-identical under the declared
-            # tolerance: the per-iteration 9dp weight snap exists
-            # precisely to absorb gradient summation-order/libm drift
-            # (it is what lets the DuckDB oracle replay match), and the
-            # numpy mean/exp sit inside the same drift class.
+            # 20 GD aggregates + the accuracy pass run on ONE Arrow
+            # collect in numpy instead of 21 sequential Spark jobs over
+            # the cached frame (the jobs were pure scheduler latency at
+            # sf0.1 — ~3 s for ~10k rows). Value-identical: the
+            # per-iteration 9dp weight snap exists precisely to absorb
+            # gradient summation-order/libm drift (it is what lets the
+            # DuckDB oracle replay match), and the numpy mean/exp sit
+            # inside the same drift class; tests/test_sizing.py pins
+            # both branches to the same rows.
             import numpy as np
 
-            rows = feats.collect()
-            x1 = np.array([r["x1"] for r in rows], dtype=np.float64)
-            x2 = np.array([r["x2"] for r in rows], dtype=np.float64)
-            yv = np.array([r["y"] for r in rows], dtype=np.float64)
+            t = feats.toArrow()
+            x1, x2, yv = (
+                t.column(c).to_numpy().astype(np.float64)
+                for c in ("x1", "x2", "y")
+            )
             for _ in range(LOGREG_ITERS):
                 p = 1.0 / (1.0 + np.exp(-(w0 + w1 * x1 + w2 * x2)))
                 d = p - yv
@@ -4161,15 +4165,11 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint + counted gate: without them the basket self-join ran
     # once per consumer (deg + two degree joins), and the node-sized
     # degree table sort-merge-joined the edge frame twice. |deg| <=
-    # 2 * |e|; fails closed past BCAST_MAX_ROWS. The count materializes
-    # the checkpoint the deg aggregate reads anyway.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # 2 * |e|; fails closed past the sizing budget. The count
+    # materializes the checkpoint the deg aggregate reads anyway.
+    from zoom_spark.operators.sizing import broadcaster
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if 2 * e.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcaster(2 * e.count(), 16)  # (node, d)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -5155,15 +5155,10 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the checkpointed tf) gates a broadcast hint for the two
     # norm lookups against the pair-space frame; checkpointed frames
     # carry unknown stats, so the planner would sort-merge-join them.
-    # Fails closed to the shuffle join past the row budget.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # Fails closed to the shuffle join past the sizing budget.
+    from zoom_spark.operators.sizing import broadcaster, fits
 
-    n_docs_val = n_docs.collect()[0]["n"]
-    bc = (
-        (lambda df: F.broadcast(df))
-        if n_docs_val <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bc = broadcaster(n_docs.collect()[0]["n"], 16)  # (doc_id, nrm)
     # round 9: deterministic md5 query batch (~1/16) vs corpus — the
     # production similarity-lookup shape; the fixture's fixed 31-token
     # vocabulary makes the all-pairs posting join inherently quadratic
@@ -5190,47 +5185,39 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-pair dot terms are the same rounded x products; summation-
     # order drift (hash-agg order vs BLAS) is ~1e-16 and both engines
     # already rely on the 6dp output grid absorbing it. Gated on the
-    # COUNTED batch posting size and the query-vocabulary width; past
-    # either budget the r13 posting join runs unchanged — fails
-    # closed at 100 TB.
+    # COUNTED batch posting size, the query-vocabulary width and the
+    # dense query matrix; past any of them the r13 posting join runs
+    # unchanged — fails closed at 100 TB.
     batch_rows = vec.where(qsel).count()
     dots = None
     # dense-axis cap: the fold materializes (chunk rows) x |q_vocab|
     # doubles per Arrow chunk — past this width the dense layout stops
     # making sense and the posting join is the right shape anyway
     QV_CAP = 4096
-    if batch_rows <= BCAST_MAX_ROWS // 4:
-        # Model-sized: collect the batch's sparse vectors (same idiom
-        # as the int-Lloyd centroid collects) and run the corpus-side
+    if fits(batch_rows, 32):  # (doc_id, x) plus a short token w
+        # Model-sized: collect the batch's postings through Arrow (same
+        # idiom as the int-Lloyd collects) and run the corpus-side
         # fold as ONE numpy matmul per Arrow batch (guide §4.2 —
         # whole-batch native compute; only the two needed columns
         # cross the boundary). Tokens outside the query vocabulary
         # contribute 0 to every dot, so the dense axis is the QUERY
         # vocabulary only.
-        q_rows = (
-            vec.where(qsel)
-            .groupBy("doc_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("w", "x"))
-                ).alias("entries")
-            )
-            .collect()
-        )
-        q_vocab = sorted(
-            {e["w"] for r in q_rows for e in r["entries"]}
-        )
-        if len(q_vocab) <= QV_CAP:
-            tid = {w: i for i, w in enumerate(q_vocab)}
-            qids = [r["doc_id"] for r in q_rows]
-            import numpy as np
+        import numpy as np
 
-            n_v = len(q_vocab)
-            qmat = np.zeros((len(qids), n_v), dtype=np.float64)
-            for qi, r in enumerate(q_rows):
-                for e in r["entries"]:
-                    qmat[qi, tid[e["w"]]] = e["x"]
-            qid_arr = np.asarray(qids, dtype=np.int64)
+        q = vec.where(qsel).select("doc_id", "w", "x").toArrow()
+        qid_arr, q_row = np.unique(
+            q.column("doc_id").to_numpy(), return_inverse=True
+        )
+        q_vocab, q_col = np.unique(
+            q.column("w").to_numpy(), return_inverse=True
+        )
+        n_v = len(q_vocab)
+        # the dense query matrix ships to every worker: gate its
+        # len(qids) x |q_vocab| doubles BEFORE allocating it
+        if n_v <= QV_CAP and fits(len(qid_arr) * n_v, 8):
+            tid = {w: i for i, w in enumerate(q_vocab.tolist())}
+            qmat = np.zeros((len(qid_arr), n_v), dtype=np.float64)
+            qmat[q_row, q_col] = q.column("x").to_numpy()
             chunk = max(1, 2_000_000 // max(1, n_v))
 
             corpus = vec.groupBy("doc_id").agg(

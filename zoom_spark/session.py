@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from zoom_spark.operators.sizing import LOCAL_BYTES
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -42,7 +44,9 @@ def get_spark(app_name: str = "zoom_spark", cpus: int | None = None) -> SparkSes
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Catalyst's automatic broadcasts and the engine's counted hints
+        # share one budget (operators/sizing.py)
+        .config("spark.sql.autoBroadcastJoinThreshold", str(LOCAL_BYTES))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

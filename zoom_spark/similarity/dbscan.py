@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zoom_spark.dedup.components import connected_components
+from zoom_spark.operators.sizing import broadcaster
 
 
 def dbscan_2d(
@@ -53,16 +54,11 @@ def dbscan_2d(
     # frames scan with unknown stats, so the planner otherwise
     # sort-merge-joins the 9x probe stream and the neighbor frame
     # against them. The count materializes the checkpoint the probe
-    # build reads anyway; fails closed past BCAST_MAX_ROWS. All
-    # downstream aggregates are integer-exact (counts / min ids), so
-    # the join-strategy change cannot move the result.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
-
-    bc = (
-        (lambda d: F.broadcast(d))
-        if base.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    # build reads anyway; fails closed past the sizing budget at the
+    # widest frame, base's 5 columns. All downstream aggregates are
+    # integer-exact (counts / min ids), so the join-strategy change
+    # cannot move the result.
+    bc = broadcaster(base.count(), 40)
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     probe = base.select(
         F.col("id").alias("a_id"),

@@ -23,10 +23,13 @@ and a rows-only driver check, not a value-hash oracle.
 
 from __future__ import annotations
 
+import hashlib
+import math
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -254,56 +257,49 @@ def _int_mstep_means(assigned: DataFrame) -> dict[int, list[float]]:
     return {r["cell"]: [float(x) for x in r["mean"]] for r in rows}
 
 
-# Row budget for the driver-local int-Lloyd path: the collected base
-# is n_rows x dim int64s (a few MB at the bound) — the same
-# model-artifact size class as the centroid collects the distributed
-# path already does per iteration. Past it, the per-iteration
-# distributed jobs run unchanged (fails closed at 100 TB).
-LLOYD_LOCAL_MAX = 100_000
-
-
-def _int_lloyd_fit_local(
-    base: DataFrame, k: int, iters: int
-) -> list[tuple[int, list[int]]]:
-    """Driver-local replay of the distributed int-Lloyd loop over a
-    COLLECTED quantized base — bitwise identical to int_assign +
-    _int_mstep_means (see int_lloyd_fit's local-path comment)."""
-    import hashlib as _hashlib
-    import math as _math
-
-    import numpy as np
-
-    rows = base.select("id", "vec").collect()
-    ids = [int(r["id"]) for r in rows]
-    X = np.asarray([r["vec"] for r in rows], dtype=np.int64)
-    order = sorted(
+def md5_seed_order(ids: list[int]) -> list[int]:
+    """Positions of ``ids`` in (md5(str(id)), id) order: the seed order
+    of the oracle's unrolled Lloyd CTEs and of the distributed path."""
+    return sorted(
         range(len(ids)),
-        key=lambda i: (
-            _hashlib.md5(str(ids[i]).encode()).hexdigest(),
-            ids[i],
-        ),
+        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
     )
-    cents: list[tuple[int, list[int]]] = [
-        (j, [int(x) for x in X[order[j]]])
-        for j in range(min(k, len(order)))
-    ]
+
+
+def int_matrix(col) -> np.ndarray:
+    """(rows, dim) int64 matrix from an Arrow list<long> column of
+    equal-length vectors, without a Python object per element."""
+    col = col.combine_chunks()
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if len(lens) and lens.min() != lens.max():
+        raise ValueError("int_matrix needs equal-length vectors")
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    return flat.reshape(len(col), int(lens[0]) if len(lens) else 0)
+
+
+def int_lloyd_local(
+    X: np.ndarray, cents: list[tuple[int, list[int]]], iters: int
+) -> list[tuple[int, list[int]]]:
+    """Driver-local replay of the distributed int-Lloyd loop
+    (int_assign + _int_mstep_means) over an int64 matrix, from seed
+    centroids sorted by cell id. Bitwise identical: int64 dots/norms
+    are exact, np.argmin takes the FIRST minimum (the lowest-cell-id
+    tie-break), the M-step divides the exact int sum by the count in
+    the same IEEE double division before the shared floor(m + 0.5)
+    snap, and empty cells drop without relabeling."""
     for _ in range(iters):
         C = np.asarray([c for _, c in cents], dtype=np.int64)
-        cids = [cid for cid, _ in cents]
-        # exact int64 scores; argmin returns the FIRST minimum =
-        # the lowest cell id (cents sorted ascending)
         scores = -2 * (X @ C.T) + (C * C).sum(axis=1)
         idx = np.argmin(scores, axis=1)
         new: dict[int, list[int]] = {}
-        for j, cid in enumerate(cids):
+        for j, (cid, _) in enumerate(cents):
             mask = idx == j
             n = int(mask.sum())
-            if n == 0:
-                continue
-            sums = X[mask].sum(axis=0)
-            new[cid] = [
-                int(_math.floor(float(int(s)) / n + 0.5)) for s in sums
-            ]
+            if n:
+                new[cid] = [
+                    int(math.floor(float(int(t)) / n + 0.5))
+                    for t in X[mask].sum(axis=0)
+                ]
         cents = sorted(new.items())
     return cents
 
@@ -314,7 +310,6 @@ def int_lloyd_fit(
     iters: int,
     seed_order_col: str = "id",
     cache_key: tuple | None = None,
-    n_rows: int | None = None,
 ) -> list[tuple[int, list[int]]]:
     """Integer-exact Lloyd fit over an int_quantize frame: md5-seeded
     (the k smallest md5(id) vectors, reproducible in ANSI SQL unlike
@@ -325,12 +320,8 @@ def int_lloyd_fit(
 
     ``cache_key``: optional caller-supplied identity of the INPUT DATA
     (plus any quantization params); when given, the fit is memoized in
-    _LLOYD_FIT_CACHE under (cache_key, k, iters, seed_order_col).
-    ``n_rows``: row count if the caller already knows it (skips one
-    count job used only to size the working frame)."""
-    import math as _math
-
-    from zoom_spark.operators.sizing import frame_partitions
+    _LLOYD_FIT_CACHE under (cache_key, k, iters, seed_order_col)."""
+    from zoom_spark.operators.sizing import fits, frame_partitions
 
     memo_key = None
     if cache_key is not None:
@@ -339,6 +330,24 @@ def int_lloyd_fit(
         if hit is not None:
             return hit
 
+    # One job reads the row count (it sizes the working frame) and the
+    # widest vector: an (id, vec) row is 8 + 8·dim bytes.
+    n_rows, dim = base.agg(F.count("*"), F.max(F.size("vec"))).first()
+    if seed_order_col == "id" and fits(n_rows, 8 + 8 * (dim or 0)):
+        # r14: a model-sized quantized base trains faster with ONE
+        # Arrow collect + numpy than with iters sequential Spark jobs
+        # (each job was ~1.2 s of scheduler + interpreted-HOF latency
+        # on a 2000-row frame at sf0.1). Same seeds, same arithmetic:
+        # see int_lloyd_local.
+        t = base.select("id", "vec").toArrow()
+        ids = t.column("id").to_pylist()
+        X = int_matrix(t.column("vec"))
+        order = md5_seed_order(ids)
+        seeds = [(j, [int(x) for x in X[i]]) for j, i in enumerate(order[:k])]
+        cents = int_lloyd_local(X, seeds, iters)
+        if memo_key is not None:
+            _LLOYD_FIT_CACHE[memo_key] = cents
+        return cents
     # Frame-sized iteration partitions: each Lloyd round runs a
     # mapInPandas partial per partition, so 32 near-empty partitions
     # cost 32 Python-worker batches per round.  coalesce never raises
@@ -346,22 +355,6 @@ def int_lloyd_fit(
     # result is bitwise independent of the partitioning (2.5x faster
     # at test SF, identical centroids).
     sc = base.sparkSession.sparkContext
-    if n_rows is None:
-        n_rows = base.count()
-    if n_rows <= LLOYD_LOCAL_MAX and seed_order_col == "id":
-        # r14: a model-sized quantized base (the gate fails closed at
-        # scale) trains faster with ONE collect + numpy than with
-        # iters sequential Spark jobs (each job was ~1.2 s of
-        # scheduler + interpreted-HOF latency on a 2000-row frame at
-        # sf0.1). Bitwise-identical arithmetic: int64 dots/norms are
-        # exact, np.argmin takes the FIRST minimum (cents sorted by
-        # cell id = the lowest-id tie-break), the M-step divides the
-        # exact int sum by the count in the same IEEE double division,
-        # and seeds order by the same (md5(str(id)), id) key.
-        cents = _int_lloyd_fit_local(base, k, iters)
-        if memo_key is not None:
-            _LLOYD_FIT_CACHE[memo_key] = cents
-        return cents
     work = base.coalesce(frame_partitions(sc, n_rows, target_rows_per_task=20_000))
 
     seed_rows = (
@@ -376,7 +369,7 @@ def int_lloyd_fit(
         assigned = int_assign(work, cents)
         means = _int_mstep_means(assigned)
         cents = sorted(
-            (cid, [int(_math.floor(m + 0.5)) for m in mean])
+            (cid, [int(math.floor(m + 0.5)) for m in mean])
             for cid, mean in means.items()
         )
     if memo_key is not None:
