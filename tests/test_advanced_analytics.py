@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 from zoom_spark.functions.cdc import cdc_boundaries, cdc_chunks, chunk_bytes
-from zoom_spark.operators.graph import triangle_count
+from zoom_spark.operators import sizing
+from zoom_spark.operators.graph import k_truss, pagerank, triangle_count
 from zoom_spark.operators.prefix import prefix_max
 from zoom_spark.operators.skyline import skyline_2d
 
@@ -177,41 +178,114 @@ class TestTriangles:
         )
         assert r["n_triangles"] == naive
 
+    @pytest.mark.parametrize("bad_id", [-1, 10**9])
+    @pytest.mark.parametrize("op", ["triangle_count", "k_truss"])
+    def test_rejects_ids_outside_order_key_range(self, spark, op, bad_id):
+        """orient_edges packs (degree, id) as deg * 10^9 + id, so an id
+        outside [0, 10^9) must fail instead of colliding silently
+        (k_truss' own [0, 2^31) check catches -1 first)."""
+        df = spark.createDataFrame(
+            [(0, 1), (1, 2), (0, 2), (2, bad_id)], "u bigint, v bigint"
+        )
+        run = {
+            "triangle_count": lambda: triangle_count(df).collect(),
+            "k_truss": lambda: k_truss(df, k=3).collect(),
+        }[op]
+        with pytest.raises(Exception, match=r"node ids must lie in \[0, "):
+            run()
+
+
+def _random_edges(seed, n, draws):
+    rng = random.Random(seed)
+    return sorted(
+        {
+            (a, b)
+            for _ in range(draws)
+            for a, b in [sorted(rng.sample(range(n), 2))]
+        }
+    )
+
+
+@pytest.fixture(params=["local", "distributed"])
+def pagerank_branch(request, monkeypatch):
+    """Drive pagerank down its driver-local branch (default budget) or
+    its distributed loop (a zero budget admits no edges)."""
+    if request.param == "distributed":
+        monkeypatch.setattr(sizing, "LOCAL_BYTES", 0)
+    return request.param
+
+
+def _numpy_pagerank(edges, iterations=10, damping=0.85):
+    """Dense reference power iteration over an undirected edge list."""
+    import numpy as np
+
+    present = sorted({x for e in edges for x in e})
+    idx = {node: i for i, node in enumerate(present)}
+    m = len(present)
+    adj = np.zeros((m, m))
+    for a, b in edges:
+        adj[idx[b], idx[a]] = 1.0
+        adj[idx[a], idx[b]] = 1.0
+    col = adj / adj.sum(axis=0, keepdims=True)
+    r = np.full(m, 1.0 / m)
+    for _ in range(iterations):
+        r = (1 - damping) / m + damping * (col @ r)
+    return {node: r[idx[node]] for node in present}
+
 
 class TestPageRank:
-    def test_against_numpy_power_iteration(self, spark):
-        import numpy as np
-
-        from zoom_spark.operators.graph import pagerank
-
-        rng = random.Random(17)
-        n = 25
-        edges = sorted(
-            {
-                (a, b)
-                for _ in range(80)
-                for a, b in [sorted(rng.sample(range(n), 2))]
-            }
-        )
+    def test_against_numpy_power_iteration(self, spark, pagerank_branch):
+        edges = _random_edges(17, 25, 80)
         df = spark.createDataFrame(edges, "u bigint, v bigint")
         got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
-
-        present = sorted({x for e in edges for x in e})
-        idx = {node: i for i, node in enumerate(present)}
-        m = len(present)
-        adj = np.zeros((m, m))
-        for a, b in edges:
-            adj[idx[b], idx[a]] = 1.0
-            adj[idx[a], idx[b]] = 1.0
-        col = adj / adj.sum(axis=0, keepdims=True)
-        r = np.full(m, 1.0 / m)
-        for _ in range(10):
-            r = (1 - 0.85) / m + 0.85 * (col @ r)
-        assert set(got) == set(present)
-        for node in present:
-            assert got[node] == pytest.approx(r[idx[node]], abs=1e-9)
+        want = _numpy_pagerank(edges)
+        assert set(got) == set(want)
+        for node, rank in want.items():
+            assert got[node] == pytest.approx(rank, abs=1e-9)
         # total mass conserved (no dangling nodes in undirected graph)
         assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
+
+    def test_string_node_ids(self, spark, pagerank_branch):
+        """String ids keep their type; ranks snapped to 9 dp each
+        round stay within 1e-8 of the unsnapped reference."""
+        edges = [(f"w{a:02d}", f"w{b:02d}") for a, b in _random_edges(23, 20, 60)]
+        df = spark.createDataFrame(edges, "u string, v string")
+        ranks = pagerank(df, iterations=4, quantize_dp=9)
+        assert ranks.schema["node"].dataType.simpleString() == "string"
+        got = {r["node"]: r["rank"] for r in ranks.collect()}
+        want = _numpy_pagerank(edges, iterations=4)
+        assert set(got) == set(want)
+        for node, rank in want.items():
+            assert got[node] == pytest.approx(rank, abs=1e-8)
+
+    def test_empty_graph(self, spark):
+        """Checked before the size gate, so no branch divides by a
+        zero node count."""
+        df = spark.createDataFrame([], "u bigint, v bigint")
+        ranks = pagerank(df)
+        assert ranks.schema.simpleString() == "struct<node:bigint,rank:double>"
+        assert ranks.collect() == []
+
+    def test_local_branch_job_count(self, spark):
+        """Below the size gate pagerank is one count plus one Arrow
+        collect of the edge frame: 3 Spark jobs on a checkpointed frame
+        (the count's aggregate runs its shuffle stage as a job of its
+        own), measured the same over 5 repeats. A per-iteration job
+        coming back below the gate fails this."""
+        import uuid
+
+        df = spark.createDataFrame(
+            _random_edges(17, 25, 80), "u bigint, v bigint"
+        ).localCheckpoint()
+        sc = spark.sparkContext
+        group = f"pagerank-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "pagerank job count")
+        try:
+            pagerank(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 class TestGlobalRowNumber:

@@ -32,6 +32,8 @@ GATED_QUERIES = [
     "als_one_sweep_rmse",
     "dbscan_embedding_cells",
     "k_truss_copurchase",
+    "pagerank_parts",
+    "textrank_keywords",
 ]
 
 

@@ -14,6 +14,8 @@ dimension-sized broadcast.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -21,7 +23,7 @@ from zoom_spark.operators.sizing import broadcaster, fits, frame_partitions
 
 # ord key = degree * ORD_BASE + node_id: a single BIGINT total order
 # (degree-major, id tie-break) that both sides of every comparison
-# share. Node ids must stay below ORD_BASE.
+# share. Node ids must lie in [0, ORD_BASE).
 ORD_BASE = 1_000_000_000
 
 
@@ -29,15 +31,34 @@ def orient_edges(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """Orient undirected, deduped edges `(u, v)` from the lower
     (degree, id) endpoint to the higher. Returns columns
     ``src, dst, dst_ord`` (the destination's order key, kept so the
-    wedge join can order destinations without re-joining degrees)."""
+    wedge join can order destinations without re-joining degrees).
+    The query fails at execution if a node id lies outside
+    [0, ORD_BASE), where two order keys could collide."""
     u, v = F.col(src), F.col(dst)
+    node = F.col("node")
     deg = (
         edges.select(u.alias("node"))
         .unionAll(edges.select(v.alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
-        .withColumn("ord", F.col("deg") * F.lit(ORD_BASE) + F.col("node"))
-        .select("node", "ord")
+        .select(
+            "node",
+            # checked in the degree projection itself: no extra job
+            F.when(
+                (node < 0) | (node >= ORD_BASE),
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            "orient_edges node ids must lie in "
+                            f"[0, {ORD_BASE}), got "
+                        ),
+                        node.cast("string"),
+                    )
+                ),
+            )
+            .otherwise(F.col("deg") * F.lit(ORD_BASE) + node)
+            .alias("ord"),
+        )
     )
     with_ord = (
         edges.join(
@@ -106,29 +127,69 @@ def pagerank(
     checkpoint_every: int = 3,
 ) -> DataFrame:
     """PageRank over an undirected edge list (each edge walked both
-    ways), fixed-iteration power method. Returns (node, rank).
+    ways), fixed-iteration power method. Returns (node, rank); the node
+    column keeps the input's id type, and an empty edge list gives an
+    empty frame.
 
-    Iterative DataFrame loop: each round is one shuffle
+    The caller's edge frame is checkpointed lazily and counted once.
+    When its directed expansion fits the ``sizing`` budget (2 rows of
+    ``(from, to, out_deg)`` per edge, 24 bytes each), the power
+    iteration runs driver-local: one Arrow collect of ``(src, dst)``,
+    ids factorized with ``np.unique`` (bigint or string), and each
+    round is ``base + damping * bincount(to, r[from] / deg[from])`` —
+    the same arithmetic, iteration count and snap as the distributed
+    loop, from one count and one collect instead of about thirty jobs.
+
+    Past the budget the loop is distributed: each round is one shuffle
     (contributions grouped by destination) + a join of ranks onto the
     directed edge list. The rank frame is referenced exactly ONCE per
-    round (a pure chain, no fan-out), so the loop is left UNCHECKPOINTED
-    and the whole fixed-iteration recursion executes as one query:
-    AQE sees each round's runtime aggregate size and plans the
-    node-sized rank side as a broadcast join, and the per-round
-    job-submission + block-materialization overhead of the former
-    per-iteration ``localCheckpoint`` disappears (r13 A/B at sf0.1:
-    11.96 s checkpointed vs 6.15 s chained, identical results; plan
-    replay is impossible in a chain — checkpoint-per-round is only
-    needed when a round's frame fans out to 2+ consumers, cf. hits()).
-    The static directed edge frame IS checkpointed: it is consumed by
-    every round. Isolated nodes never appear (no edges); with the
-    undirected expansion every present node has out-degree >= 1, so
-    there is no dangling mass to redistribute."""
+    round (a pure chain, no fan-out), so AQE sees each round's runtime
+    aggregate size and plans the node-sized rank side as a broadcast
+    join; a lazy ``localCheckpoint`` every ``checkpoint_every`` rounds
+    bounds the chained plan's depth without a job of its own (r13 A/B
+    at sf0.1: 11.96 s checkpointed every round vs 6.15 s chained,
+    identical results). The static directed edge frame IS
+    checkpointed: it is consumed by every round. Isolated nodes never
+    appear (no edges); with the undirected expansion every present
+    node has out-degree >= 1, so there is no dangling mass to
+    redistribute."""
     # The caller's edge frame is referenced 4x in the pre-loop plan
     # (two union branches x degree-agg + join): checkpoint it once so
     # an expensive edge construction (e.g. a self-join co-purchase
     # build) materializes exactly once.
     edges = edges.localCheckpoint(eager=False)
+    spark = edges.sparkSession
+    n_edges = edges.count()
+    # quantize_dp: engine-parity rounding schedule — snap every
+    # iteration's ranks to a fixed decimal grid (floor(x*10^dp+0.5),
+    # the repo's shared HALF-UP spelling) so a SQL oracle replaying the
+    # same unrolled iterations sees bit-identical inputs each round and
+    # float summation-order drift (~1e-17) can never accumulate across
+    # iterations or reach the output grid.
+    quant = float(10**quantize_dp) if quantize_dp is not None else None
+    if n_edges == 0:
+        node_type = edges.schema[src].dataType.simpleString()
+        return spark.createDataFrame([], f"node {node_type}, rank double")
+    if fits(2 * n_edges, 24):
+        t = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).toArrow()
+        ends = np.concatenate(
+            [c.to_numpy(zero_copy_only=False) for c in t.columns]
+        )
+        # ends = (src..., dst...), so the directed expansion is
+        # from = ends, to = (dst..., src...) in factorized ids
+        nodes, frm = np.unique(ends, return_inverse=True)
+        to = np.concatenate([frm[n_edges:], frm[:n_edges]])
+        m = len(nodes)
+        deg = np.bincount(frm, minlength=m)
+        r = np.full(m, 1.0 / m)
+        base = (1.0 - damping) / m
+        for _ in range(iterations):
+            r = base + damping * np.bincount(
+                to, weights=r[frm] / deg[frm], minlength=m
+            )
+            if quant is not None:
+                r = np.floor(r * quant + 0.5) / quant
+        return spark.createDataFrame(pa.table({"node": nodes, "rank": r}))
     directed = edges.select(
         F.col(src).alias("from"), F.col(dst).alias("to")
     ).unionAll(edges.select(F.col(dst).alias("from"), F.col(src).alias("to")))
@@ -154,13 +215,6 @@ def pagerank(
     n_total = nodes.count()
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_total))
     base = (1.0 - damping) / n_total
-    # quantize_dp: engine-parity rounding schedule — snap every
-    # iteration's ranks to a fixed decimal grid (floor(x*10^dp+0.5),
-    # the repo's shared HALF-UP spelling) so a SQL oracle replaying the
-    # same unrolled iterations sees bit-identical inputs each round and
-    # float summation-order drift (~1e-17) can never accumulate across
-    # iterations or reach the output grid.
-    quant = float(10**quantize_dp) if quantize_dp is not None else None
     for _ in range(iterations):
         contribs = (
             directed.join(ranks, on=F.col("from") == F.col("node"))
@@ -529,11 +583,49 @@ def k_truss(
     partitioning (support counting is exact). ``assume_deduped=True``
     skips the defensive distinct (a full edge shuffle) for callers
     whose edge build already guarantees distinct normalized pairs.
-    Raises ValueError if a node id lies outside [0, 2^31)."""
+    Raises ValueError if a node id lies outside [0, 2^31); an id in
+    [ORD_BASE, 2^31) fails at execution in orient_edges."""
     cur = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not assume_deduped:
         cur = cur.distinct()
     cur = cur.localCheckpoint(eager=False)
+    # r14: every loop-state frame keys edges by ONE packed BIGINT
+    # _ek = u * 2^31 + v instead of the (u, v) pair. Node ids in
+    # [0, 2^31) (checked on the up-front edge aggregate below) make the
+    # packing collision-free and order-exact; it halves the bytes scanned
+    # and hash-probed by the per-round triangle flagging (measured on
+    # the 1.88M-triangle sf0.1 co-purchase graph: 0.67 s -> 0.25 s per
+    # flag pass). tri carries (e1, e2, e3); u/v re-emerge only in the
+    # final projection via exact div/mod.
+    _PACK = 1 << 31
+
+    def _pack(u, v):
+        return u * F.lit(_PACK) + v
+
+    # One up-front aggregate over the edge list. BOTH loop-state frames
+    # are keyed by edge — d_cum holds dead edges, dec_cum is
+    # groupBy(_ek)-compacted — so each is provably <= n_edges rows of
+    # (_ek, long). When the whole edge set fits the broadcast budget,
+    # every per-round broadcast gate is decided HERE and the per-round
+    # dec_cum.count() jobs (r13: one full tri-scan job per round, HALF
+    # the peel cost) disappear: the lazy checkpoints chain into the
+    # next round's batch.count(). Past the budget, the loop keeps the
+    # r13 shape exactly (counted gates + giant-cascade compaction) —
+    # fails closed at 100 TB. The same job reads the id range the _ek
+    # packing needs; an id outside it would silently alias two edges.
+    # It runs before orient_edges, whose broadcasts execute as soon as
+    # its checkpoint is planned (orient_edges guards its own narrower
+    # [0, ORD_BASE) range at execution).
+    n_edges, lo, hi = cur.agg(
+        F.count("*"),
+        F.least(F.min("u"), F.min("v")),
+        F.greatest(F.max("u"), F.max("v")),
+    ).first()
+    if n_edges and not (0 <= lo and hi < _PACK):
+        raise ValueError(
+            f"k_truss node ids must lie in [0, 2^31), got [{lo}, {hi}]"
+        )
+    edges_bcastable = fits(n_edges, 16)
     oriented = orient_edges(cur, src="u", dst="v").localCheckpoint(
         eager=False
     )
@@ -560,19 +652,6 @@ def k_truss(
             F.greatest("dst", "w").alias("v3"),
         )
     )
-    # r14: every loop-state frame keys edges by ONE packed BIGINT
-    # _ek = u * 2^31 + v instead of the (u, v) pair. Node ids in
-    # [0, 2^31) (checked on the up-front edge aggregate below) make the
-    # packing collision-free and order-exact; it halves the bytes scanned
-    # and hash-probed by the per-round triangle flagging (measured on
-    # the 1.88M-triangle sf0.1 co-purchase graph: 0.67 s -> 0.25 s per
-    # flag pass). tri carries (e1, e2, e3); u/v re-emerge only in the
-    # final projection via exact div/mod.
-    _PACK = 1 << 31
-
-    def _pack(u, v):
-        return u * F.lit(_PACK) + v
-
     tri = tri.select(
         _pack(F.col("u1"), F.col("v1")).alias("e1"),
         _pack(F.col("u2"), F.col("v2")).alias("e2"),
@@ -596,27 +675,6 @@ def k_truss(
         )
         .localCheckpoint(eager=False)
     )
-    # One up-front aggregate over the edge list. BOTH loop-state frames
-    # are keyed by edge — d_cum holds dead edges, dec_cum is
-    # groupBy(_ek)-compacted — so each is provably <= n_edges rows of
-    # (_ek, long). When the whole edge set fits the broadcast budget,
-    # every per-round broadcast gate is decided HERE and the per-round
-    # dec_cum.count() jobs (r13: one full tri-scan job per round, HALF
-    # the peel cost) disappear: the lazy checkpoints chain into the
-    # next round's batch.count(). Past the budget, the loop keeps the
-    # r13 shape exactly (counted gates + giant-cascade compaction) —
-    # fails closed at 100 TB. The same job reads the id range the _ek
-    # packing needs; an id outside it would silently alias two edges.
-    n_edges, lo, hi = cur.agg(
-        F.count("*"),
-        F.least(F.min("u"), F.min("v")),
-        F.greatest(F.max("u"), F.max("v")),
-    ).first()
-    if n_edges and not (0 <= lo and hi < _PACK):
-        raise ValueError(
-            f"k_truss node ids must lie in [0, 2^31), got [{lo}, {hi}]"
-        )
-    edges_bcastable = fits(n_edges, 16)
 
     def _sup_now(base, dec_cum, small):
         """Current support = frozen base support minus accumulated

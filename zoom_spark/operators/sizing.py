@@ -5,7 +5,8 @@ operators.
 One budget. ``LOCAL_BYTES`` bounds every frame that leaves the
 distributed plan whole: a broadcast hint ships it to every executor,
 and a driver-local fork (the int-Lloyd and PQ fits, logreg GD, the
-tfidf query batch) collects it into numpy on the driver. Callers ask
+tfidf query batch, PageRank's power iteration) collects it into numpy
+on the driver. Callers ask
 ``fits(n_rows, row_bytes)`` with a COUNTED row total they already
 have (never an estimate) and the width of the rows they are about to
 move, so a gate fails closed on memory as well as on row counts.
