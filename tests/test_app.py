@@ -4,6 +4,10 @@ disciplines, watermark advance, idempotent retry."""
 
 from __future__ import annotations
 
+import collections
+import datetime
+import uuid
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -11,11 +15,29 @@ from zoom_spark.app import Connector, main
 from zoom_spark.io import load_table
 
 
+SINKS = (
+    "users", "groups", "group_members", "meetings", "participants",
+    "meeting_settings",
+)
+
+
 def test_all_stages_end_to_end(spark, tmp_path):
+    """The bootstrap night, and its Spark job count: 27 on each of 5
+    repeats. Each stage runs its plan once, inside the write that also
+    counts it; a row-count re-run or an empty-write pre-check coming
+    back fails this (with them the night ran 54 jobs)."""
     sink = str(tmp_path / "wh")
-    counts = main(
-        ["--all", "--source-dir", SF_DIR, "--sink-dir", sink], spark=spark
-    )
+    sc = spark.sparkContext
+    group = f"connector-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "connector job count")
+    try:
+        counts = main(
+            ["--all", "--source-dir", SF_DIR, "--sink-dir", sink], spark=spark
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 27
     n_cust = load_table(spark, SF_DIR, "customer").count()
     assert counts["users"] == n_cust
     assert counts["groups"] == 25
@@ -40,6 +62,35 @@ def test_all_stages_end_to_end(spark, tmp_path):
     loaded_keys = {r.o_orderkey for r in meetings.select("o_orderkey").collect()}
     got_keys = {r.meeting_key for r in parts.select("meeting_key").distinct().collect()}
     assert got_keys <= loaded_keys
+
+
+def test_caught_up_night_changes_no_sink(spark, tmp_path):
+    """No sf0.001 order falls on the day after the first order day, so
+    the second night finds nothing to load: every incremental count is
+    0 and every sink holds the same rows and schema as after the
+    bootstrap (an empty append adds a schema-only file, an empty
+    dynamic-partition overwrite touches no partition)."""
+    sink = str(tmp_path / "wh")
+    argv = ["--all", "--source-dir", SF_DIR, "--sink-dir", sink]
+    orders = load_table(spark, SF_DIR, "orders").select(
+        F.to_date("o_orderdate").alias("d")
+    )
+    first_day = orders.agg(F.min("d")).first()[0]
+    next_day = first_day + datetime.timedelta(days=1)
+    assert orders.where(F.col("d") == next_day).count() == 0
+
+    def snapshot():
+        out = {}
+        for t in SINKS:
+            df = spark.read.parquet(f"{sink}/{t}")
+            out[t] = (df.schema, collections.Counter(df.collect()))
+        return out
+
+    first = main(argv, spark=spark)
+    before = snapshot()
+    again = main(argv, spark=spark)
+    assert again == dict(first, meetings=0, participants=0, meeting_settings=0)
+    assert snapshot() == before
 
 
 def test_meetings_watermark_advances_one_day_per_run(spark, tmp_path):

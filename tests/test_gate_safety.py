@@ -204,3 +204,51 @@ def test_size_budget_is_assigned_only_in_sizing():
                 continue
             bad += [f"{rel}:{node.lineno} {n}" for n in names]
     assert not bad, f"size budget defined outside operators/sizing.py: {bad}"
+
+
+# --- one sink commit path (io.py owns every batch write) -------------
+
+_NO_LOCAL_FS = ("operators/merge.py", "streaming/windows.py")
+
+
+def test_batch_writes_and_sink_probes_only_in_io():
+    """Only io.py may write a batch DataFrame (``df.write``; a
+    ``writeStream`` is a different attribute, and a ``.write(...)``
+    call is a file handle's), so a second staging-and-copy path cannot
+    slip back in. The merge and streaming sinks may not probe or
+    delete sink paths through the driver's local file system
+    (``os.path.exists``, ``os.walk``, ``shutil``): a sink on HDFS/S3
+    is not there, and ``io.sink_exists`` is the one probe."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "zoom_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), filename=rel)
+        called = {
+            id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)
+        }
+        for node in ast.walk(tree):
+            if (
+                rel != "io.py"
+                and isinstance(node, ast.Attribute)
+                and node.attr == "write"
+                and id(node) not in called
+            ):
+                bad.append(f"{rel}:{node.lineno} DataFrame.write")
+            if rel not in _NO_LOCAL_FS:
+                continue
+            if isinstance(node, ast.Attribute) and ast.unparse(node) in (
+                "os.path.exists", "os.walk",
+            ):
+                bad.append(f"{rel}:{node.lineno} {ast.unparse(node)}")
+            elif isinstance(node, ast.Name) and node.id == "shutil":
+                bad.append(f"{rel}:{node.lineno} shutil")
+            elif isinstance(node, (ast.Import, ast.ImportFrom)) and any(
+                "shutil" in (a.name, getattr(node, "module", None))
+                for a in node.names
+            ):
+                bad.append(f"{rel}:{node.lineno} import shutil")
+    assert not bad, f"sink write or local-FS probe outside io.py: {bad}"

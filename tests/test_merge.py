@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import datetime
 import glob
+import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from zoom_spark.operators.merge import (
@@ -41,6 +44,58 @@ def test_merge_upsert_idempotent_under_retry(spark, tmp_path):
     merge_upsert_to_path(spark, path, upd, "k")  # simulated retry
     got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {(1, 10), (2, 21), (3, 30)}
+
+
+def test_merge_rolls_back_an_interrupted_swap(spark, tmp_path):
+    """A crash between replace_table's two renames leaves no live table
+    and a complete <path>__old: the next merge rolls the swap back and
+    merges into it instead of bootstrapping over it. A stale __old
+    beside a live table (a crash after both renames) is dropped."""
+    path = str(tmp_path / "sink")
+    schema = "k long, v long"
+    merge_upsert_to_path(
+        spark, path, spark.createDataFrame([(1, 10), (2, 20)], schema), "k"
+    )
+    os.rename(path, path + "__old")
+    merge_upsert_to_path(
+        spark, path, spark.createDataFrame([(2, 21), (3, 30)], schema), "k"
+    )
+    got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, 10), (2, 21), (3, 30)}
+    assert not os.path.exists(path + "__old")
+    assert not os.path.exists(path + "__staging")
+
+    shutil.copytree(path, path + "__old")
+    merge_upsert_to_path(
+        spark, path, spark.createDataFrame([(4, 40)], schema), "k"
+    )
+    got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, 10), (2, 21), (3, 30), (4, 40)}
+    assert not os.path.exists(path + "__old")
+
+
+def test_failed_staging_write_leaves_live_table(spark, tmp_path):
+    """A merge whose staged write fails leaves the live table readable
+    and unchanged, and the next merge commits past the partial
+    staging directory."""
+    path = str(tmp_path / "sink")
+    schema = "k long, v long"
+    merge_upsert_to_path(
+        spark, path, spark.createDataFrame([(1, 10), (2, 20)], schema), "k"
+    )
+    bad = spark.createDataFrame([(3, 30)], schema).withColumn(
+        "v", F.raise_error(F.lit("injected write failure")).cast("long")
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        merge_upsert_to_path(spark, path, bad, "k")
+    got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, 10), (2, 20)}
+
+    merge_upsert_to_path(
+        spark, path, spark.createDataFrame([(3, 30)], schema), "k"
+    )
+    got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, 10), (2, 20), (3, 30)}
 
 
 def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):

@@ -511,7 +511,12 @@ def test_stream_merge_upsert_cdc_apply(spark, tmp_path):
     (within AND across micro-batches) must converge to exactly one row
     per key carrying the highest sequence number, and re-running the
     same changes against a fresh checkpoint must leave the table
-    unchanged (last-write-wins idempotency)."""
+    unchanged (last-write-wins idempotency). The newer change file is
+    given the older mtime, so the file stream applies it FIRST: the
+    older version of key 1 arriving later must not overwrite it."""
+    import os
+    import time
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -535,6 +540,10 @@ def test_stream_merge_upsert_cdc_apply(spark, tmp_path):
     write_changes("b1.parquet", [(1, "a", 10), (2, "b", 11), (2, "b2", 12), (3, "c", 13)])
     # batch 2 (separate file): update key 1, delete-free upsert of key 4
     write_changes("b2.parquet", [(1, "a2", 20), (4, "d", 21)])
+    # the file source orders micro-batches by mtime: b2 arrives first
+    now = time.time()
+    os.utime(src / "b2.parquet", (now - 10, now - 10))
+    os.utime(src / "b1.parquet", (now, now))
 
     def run(cp):
         stream = (

@@ -80,7 +80,6 @@ class Connector:
         self.spark = spark
         self.source_dir = source_dir
         self.sink_dir = sink_dir
-        os.makedirs(sink_dir, exist_ok=True)
 
     # -- helpers ----------------------------------------------------
     def _src(self, name: str) -> DataFrame:
@@ -90,18 +89,24 @@ class Connector:
         return os.path.join(self.sink_dir, table)
 
     def _sink(self, table: str) -> DataFrame | None:
+        """The sink table, or None before its first load (S10)."""
         path = self._sink_path(table)
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:  # noqa: BLE001 — first run: sink absent (S10)
+        if not zio.sink_exists(self.spark, path):
             return None
+        return self.spark.read.parquet(path)
+
+    def _unloaded_meetings(self, meetings: DataFrame, table: str) -> DataFrame:
+        """``o_orderkey`` of the meetings not yet in sink ``table``."""
+        sink = self._sink(table)
+        if sink is None:
+            return meetings.select("o_orderkey").distinct()
+        return delta_keys(meetings, sink, "o_orderkey", "meeting_key")
 
     # -- USERS stages (full refresh, S9) -----------------------------
     @elapsed
     def load_users(self) -> int:
         users = conform_schema(self._src("customer"), USER_CONTRACT)
-        zio.write_overwrite(users, self._sink_path("users"))
-        n = users.count()
+        n = zio.write_overwrite(users, self._sink_path("users"))
         logger.info("loaded %d users", n)
         return n
 
@@ -112,8 +117,7 @@ class Connector:
             F.col("n_name").alias("group_name"),
             F.col("n_regionkey").alias("region_id"),
         )
-        zio.write_overwrite(groups, self._sink_path("groups"))
-        return groups.count()
+        return zio.write_overwrite(groups, self._sink_path("groups"))
 
     @elapsed
     def load_group_members(self) -> int:
@@ -127,8 +131,7 @@ class Connector:
             ),
             load_source="connector",
         )
-        zio.write_overwrite(members, self._sink_path("group_members"))
-        return members.count()
+        return zio.write_overwrite(members, self._sink_path("group_members"))
 
     # -- MEETINGS stages (incremental, §4.1) -------------------------
     @elapsed
@@ -146,13 +149,10 @@ class Connector:
                 F.col("next_load_date").alias("d")
             )
         delta = src.join(F.broadcast(day)).where(F.col("order_date") == F.col("d")).drop("d")
-        if delta.isEmpty():
-            logger.info("meetings caught up (P8 guard) — nothing to load")
-            return 0
-        zio.write_idempotent_partition(
+        # a caught-up night (P8 guard) writes no partition and loads 0
+        n = zio.write_idempotent_partition(
             delta, self._sink_path("meetings"), "order_date"
         )
-        n = delta.count()
         logger.info("loaded %d meetings", n)
         return n
 
@@ -163,12 +163,7 @@ class Connector:
         meetings = self._sink("meetings")
         if meetings is None:
             return 0
-        parts_sink = self._sink("participants")
-        keys = (
-            delta_keys(meetings, parts_sink, "o_orderkey", "meeting_key")
-            if parts_sink is not None
-            else meetings.select("o_orderkey").distinct()
-        )
+        keys = self._unloaded_meetings(meetings, "participants")
         li = self._src("lineitem")
         delta = li.join(
             keys.withColumnRenamed("o_orderkey", "meeting_key"),
@@ -178,10 +173,7 @@ class Connector:
             F.col("l_suppkey").alias("participant_id"),
             F.col("l_quantity").alias("duration"),
         )
-        if delta.isEmpty():
-            return 0
-        zio.write_append(delta, self._sink_path("participants"))
-        return delta.count()
+        return zio.write_append(delta, self._sink_path("participants"))
 
     @elapsed
     def load_meeting_settings(self) -> int:
@@ -191,12 +183,7 @@ class Connector:
         meetings = self._sink("meetings")
         if meetings is None:
             return 0
-        settings_sink = self._sink("meeting_settings")
-        keys = (
-            delta_keys(meetings, settings_sink, "o_orderkey", "meeting_key")
-            if settings_sink is not None
-            else meetings.select("o_orderkey").distinct()
-        )
+        keys = self._unloaded_meetings(meetings, "meeting_settings")
         detail = meetings.join(
             keys.withColumnRenamed("o_orderkey", "mk"),
             meetings.o_orderkey == F.col("mk"),
@@ -206,10 +193,7 @@ class Connector:
             F.col("o_orderstatus").isin("O").alias("waiting_room"),
             F.lit(None).cast("boolean").alias("meeting_authentication"),
         )
-        if detail.isEmpty():
-            return 0
-        zio.write_append(detail, self._sink_path("meeting_settings"))
-        return detail.count()
+        return zio.write_append(detail, self._sink_path("meeting_settings"))
 
     # -- ACCOUNTS stage (write-back, S11) ----------------------------
     @elapsed

@@ -12,13 +12,27 @@ Sinks re-express the reference's two load disciplines:
       -> mode("append"); idempotent variant = dynamic partition
          overwrite keyed by load partition (fixes the reference's
          double-insert-on-retry hazard, SURVEY.md §1.5).
+Every batch parquet write in the engine goes through this module, and
+each writer returns the rows it wrote, read off an ``Observation`` on
+the write job itself (no second job re-runs the plan to count it).
+
+``replace_table`` commits a table rebuilt from itself (MERGE, SCD2,
+compaction) on the sink's Hadoop FileSystem: write ``<path>__staging``
+once, rename ``<path>`` to ``<path>__old``, rename the staging to
+``<path>``, delete ``__old``. A crash before the first rename leaves
+the live table as it was; between the renames, ``sink_exists`` renames
+``__old`` back before it answers; after them, the next swap deletes the
+stale ``__old``. A directory rename is atomic on HDFS and local disk;
+on object stores (S3, GCS) it is a copy, so there the swap is neither
+atomic nor cheap.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -43,7 +57,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ),
     so the conversion must key off the observed dtype, not an assumed
     physical encoding."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     dt = df.schema["ts"].dataType
@@ -132,20 +145,71 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def table_exists(spark: SparkSession, name: str) -> bool:
-    """S10 catalog existence probe (/root/reference/main.py:36,76-78)."""
-    return spark.catalog.tableExists(name)
+def _write_counted(df: DataFrame, write) -> int:
+    """Run ``write(df.write)`` and return the rows the write job saw."""
+    rows = Observation()
+    write(df.observe(rows, F.count(F.lit(1)).alias("rows")).write)
+    return rows.get["rows"]
 
 
-def write_overwrite(df: DataFrame, path: str) -> None:
+def write_overwrite(df: DataFrame, path: str) -> int:
     """S9 drop-then-load full refresh; schema reset comes free because
-    overwrite rewrites the footer (reference: main.py:38-46)."""
-    df.write.mode("overwrite").parquet(path)
+    overwrite rewrites the footer (reference: main.py:38-46). Returns
+    the rows written. For a ``df`` that reads ``path``: replace_table."""
+    return _write_counted(df, lambda w: w.mode("overwrite").parquet(path))
 
 
-def write_append(df: DataFrame, path: str) -> None:
-    """S8 append sink (reference: main.py:66)."""
-    df.write.mode("append").parquet(path)
+def write_append(df: DataFrame, path: str) -> int:
+    """S8 append sink (reference: main.py:66). Returns the rows
+    written; an empty ``df`` appends one schema-only file."""
+    return _write_counted(df, lambda w: w.mode("append").parquet(path))
+
+
+def sink_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of a sink, so a sink on HDFS/S3 is probed
+    where it lives (``os.path`` would call it absent: a bootstrap)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return hpath.getFileSystem(conf), hpath
+
+
+def _rename(fs, src, dst) -> None:
+    # Hadoop's rename reports failure by returning False, not raising
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src.toString()} -> {dst.toString()} failed")
+
+
+def sink_exists(spark: SparkSession, path: str) -> bool:
+    """S10 existence probe of the table at ``path``. It first rolls
+    back a ``replace_table`` swap that stopped between its renames."""
+    fs, live = sink_fs(spark, path)
+    if fs.exists(live):
+        return True
+    old = live.suffix("__old")
+    if not fs.exists(old):
+        return False
+    _rename(fs, old, live)
+    return True
+
+
+def replace_table(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df``, which may read
+    ``path`` (the staged swap in the module docstring). A caller that
+    reads the old table probes it with ``sink_exists`` first."""
+    spark = df.sparkSession
+    fs, live = sink_fs(spark, path)
+    staging, old = live.suffix("__staging"), live.suffix("__old")
+    fs.delete(staging, True)
+    write_overwrite(df, staging.toString())
+    if fs.exists(live):
+        # a stale __old beside a live table is a swap that finished
+        # its renames; renaming onto it would nest the table inside it
+        fs.delete(old, True)
+        _rename(fs, live, old)
+    _rename(fs, staging, live)
+    fs.delete(old, True)
+    # a reader in this session must not serve the pre-swap listing
+    spark.catalog.refreshByPath(path)
 
 
 def read_csv(
@@ -214,15 +278,17 @@ def read_jdbc(
     return reader.load()
 
 
-def write_idempotent_partition(df: DataFrame, path: str, partition_col: str) -> None:
+def write_idempotent_partition(df: DataFrame, path: str, partition_col: str) -> int:
     """Idempotent incremental sink: dynamic partition overwrite keyed by
     the load partition column. A retried load rewrites its own
     partition instead of double-appending (fixes SURVEY.md §1.5).
     At 100 TB this is also the pruning axis: the watermark predicate
-    only touches the partitions it names."""
-    (
-        df.write.mode("overwrite")
+    only touches the partitions it names. Returns the rows written; an
+    empty ``df`` touches no partition."""
+    return _write_counted(
+        df,
+        lambda w: w.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
-        .parquet(path)
+        .parquet(path),
     )

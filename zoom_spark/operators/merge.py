@@ -5,15 +5,18 @@ Without a transactional table format in the container (Delta/Iceberg
 ship MERGE natively and this module's signatures match that shape),
 upsert over parquet is expressed relationally: keep every existing
 row whose key is absent from the updates (left_anti), union the
-updates, rewrite. At scale the rewrite is bounded by partitioning:
-merge_upsert_partitioned only rewrites partitions the updates touch
-(read-side partition pruning + dynamic partition overwrite).
+updates, rewrite (O(table) per merge), committed by io.replace_table:
+one staged write and a rename swap.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from zoom_spark.io import replace_table, sink_exists, sink_fs
 
 
 def merge_upsert(
@@ -34,33 +37,16 @@ def merge_upsert_to_path(
     keys: list[str] | str,
 ) -> None:
     """Full-table merge rewrite for unpartitioned sinks (bootstrap
-    when the sink does not exist yet).
-
-    Existence is probed through the Hadoop FileSystem API, not
-    ``os.path`` — the sink is an HDFS/S3 URI on a real cluster, where
-    a local-FS check would silently report "absent" and the merge
-    would DROP the whole existing table into a bootstrap overwrite.
-    After the final write the path's cached file listing is refreshed
-    so a reader in the same session can never serve the pre-merge
-    snapshot (same-session read-after-overwrite staleness surfaced as
-    a load flake in the crash-recovery e2e, round 11)."""
-    jvm = spark._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        existing = spark.read.parquet(path)
-        merged = merge_upsert(existing, updates, keys)
-    else:
-        merged = updates
-    # rewrite via a staging path: the merge plan reads the live sink,
-    # so overwriting it in place would race the scan
-    staging = path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    final = spark.read.parquet(staging)
-    final.write.mode("overwrite").parquet(path)
-    spark.catalog.refreshByPath(path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    when the sink does not exist yet). The merged table is written once
+    and swapped in by ``io.replace_table``; the existence probe is
+    ``io.sink_exists``, which also rolls back a swap a crash left
+    half done."""
+    merged = (
+        merge_upsert(spark.read.parquet(path), updates, keys)
+        if sink_exists(spark, path)
+        else updates
+    )
+    replace_table(merged, path)
 
 
 def compact_small_files(
@@ -73,23 +59,10 @@ def compact_small_files(
     per-page appends (the reference's load pattern) accrete small
     files that throttle scan parallelism at scale; compaction restores
     scan-sized splits. Returns the output file count."""
-    import math
-    import os
-    import shutil
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    fs, hpath = sink_fs(spark, path)
+    total = fs.getContentSummary(hpath).getLength()
     n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "__compact"
-    df.repartition(n_out).write.mode("overwrite").parquet(staging)
-    compacted = spark.read.parquet(staging)
-    compacted.write.mode("overwrite").parquet(path)
-    shutil.rmtree(staging, ignore_errors=True)
+    replace_table(spark.read.parquet(path).repartition(n_out), path)
     return n_out
 
 

@@ -37,6 +37,7 @@ from zoom_spark.functions import text as T
 from zoom_spark.streaming.windows import (
     cdc_apply_batch,
     read_documents_stream,
+    run_available_now,
 )
 
 
@@ -149,14 +150,10 @@ def stream_curation_pipeline(
         T.token_count("text").cast("bigint").alias("n_tokens"),
     )
     kept = scored.where(F.col("q") >= q_min)
-    q = (
-        kept.writeStream.foreachBatch(
-            lambda df, epoch: curate_batch(
-                df, test_shingles, sink_path, n=n, epoch=epoch
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        kept,
+        lambda df, epoch: curate_batch(
+            df, test_shingles, sink_path, n=n, epoch=epoch
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()

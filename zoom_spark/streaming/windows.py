@@ -33,6 +33,15 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from pyspark.sql.window import Window
+
+from zoom_spark.io import (
+    normalize_events_ts,
+    replace_table,
+    sink_exists,
+    write_idempotent_partition,
+)
+from zoom_spark.operators.merge import merge_upsert_to_path, scd2_close_and_insert
 
 # events.parquet schema when ts is stored as TIMESTAMP(NANOS) and read
 # under nanosAsLong (fixtures have also shipped micros — see
@@ -60,8 +69,6 @@ def read_events_stream(
     shipped ts as both nanos-bigint and micros — so sniff the actual
     read schema with a zero-cost batch read (footer only), then apply
     the shared dtype-aware normalization."""
-    from zoom_spark.io import normalize_events_ts
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     raw_schema = spark.read.parquet(
@@ -207,19 +214,11 @@ def write_stream_idempotent(
     at-least-once upstream — rewrites its partitions instead of
     double-appending. This is the streaming form of the §1.5 fix and
     the standard foreachBatch + idempotent-write pattern."""
-    from zoom_spark.io import write_idempotent_partition
-
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, _epoch: write_idempotent_partition(
-                df, path, partition_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream_df,
+        lambda df, _epoch: write_idempotent_partition(df, path, partition_col),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def write_stream_merge_upsert(
@@ -233,24 +232,16 @@ def write_stream_merge_upsert(
     parquet table keyed on `keys`, updates winning over existing rows
     (the foreachBatch + MERGE pattern every lakehouse CDC pipeline
     uses; the reference's drop-then-reload sink, main.py:58,130,152 +
-    insert_into, is the non-incremental version this replaces). Within a batch, only the row with the highest
-    `seq_col` per key is applied — a batch replaying after a crash
-    re-applies the same per-key winners, so the sink converges to the
-    same table (idempotent under at-least-once delivery). At scale the
-    per-batch reduce is one hash aggregate on the key, and the merge
-    rewrite is bounded by merge_upsert_to_path's staging swap (or the
-    partition-pruned variant for partitioned sinks)."""
-    k = [keys] if isinstance(keys, str) else list(keys)
-
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, _epoch: cdc_apply_batch(df, path, k, seq_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    insert_into, is the non-incremental version this replaces). A row
+    is applied only if its `seq_col` is the highest for its key in the
+    batch and in the sink (cdc_apply_batch), whatever order the change
+    files arrive in. Each batch rewrites the sink once, through
+    merge_upsert_to_path's staged write and rename swap."""
+    run_available_now(
+        stream_df,
+        lambda df, _epoch: cdc_apply_batch(df, path, keys, seq_col),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def cdc_apply_batch(
@@ -261,23 +252,16 @@ def cdc_apply_batch(
     drop_seq: bool = False,
 ) -> None:
     """One micro-batch of the CDC-apply sink: reduce the batch to its
-    per-key winners (highest `seq_col`) and MERGE them into the
-    parquet table at `path`. Idempotent by construction — re-applying
-    the same batch re-derives the same winners and the merge
-    overwrites them in place, which is exactly what makes the sink
-    safe under Structured Streaming's at-least-once foreachBatch
-    replay (a crash after the sink write but before the epoch commit
-    re-runs this function with the same rows). Exposed separately so
-    crash-recovery tests can drive it under fault injection.
-    ``drop_seq=True`` keeps the ordering column out of the sink
-    schema (for callers whose seq is a transport-only epoch/arrival
-    stamp rather than a domain column); cross-batch latest-wins does
-    not need a persisted seq because a later batch's merge overwrites
-    matched keys unconditionally."""
-    from pyspark.sql.window import Window
-
-    from zoom_spark.operators.merge import merge_upsert_to_path
-
+    per-key winners (highest `seq_col`), drop every winner whose key
+    already holds a `seq_col` at least as high in the sink, and MERGE
+    the rest into the parquet table at `path`. An older change file
+    arriving late (the file stream orders by mtime) loses, and a batch
+    replayed after a crash (at-least-once foreachBatch) is a no-op.
+    Exposed separately so crash-recovery tests can drive it.
+    ``drop_seq=True`` keeps a transport-only seq (an epoch/arrival
+    stamp) out of the sink schema; with nothing persisted to compare,
+    such callers get epoch order across batches, not seq order."""
+    spark = df.sparkSession
     k = [keys] if isinstance(keys, str) else list(keys)
     w = Window.partitionBy(*k).orderBy(F.col(seq_col).desc())
     latest = (
@@ -287,7 +271,26 @@ def cdc_apply_batch(
     )
     if drop_seq:
         latest = latest.drop(seq_col)
-    merge_upsert_to_path(df.sparkSession, path, latest, k)
+    elif sink_exists(spark, path):
+        held = spark.read.parquet(path)
+        stale = [latest[c] == held[c] for c in k]
+        stale.append(held[seq_col] >= latest[seq_col])
+        # checkpointed by the merge's own job: the swap deletes the files
+        # `held` lists, and the updates must stay readable after it
+        latest = latest.join(held, stale, "left_anti").localCheckpoint(eager=False)
+    merge_upsert_to_path(spark, path, latest, k)
+
+
+def run_available_now(stream_df: DataFrame, batch_fn, checkpoint_dir: str) -> None:
+    """Apply ``batch_fn(df, epoch)`` to every micro-batch available now
+    (checkpointed foreachBatch) and block until the stream is drained."""
+    q = (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def run_to_memory(
@@ -464,43 +467,31 @@ def write_stream_scd2(
     table overwrites itself, not duplicates (idempotent under
     at-least-once foreachBatch).
 
-    Scale note: each micro-batch rewrites the WHOLE history table
-    (O(table) per batch) — the honest cost of an SCD2 sink on plain
-    parquet, where closing a row means rewriting its file. At
+    Scale note: each micro-batch rewrites the WHOLE history table once
+    (io.replace_table, O(table) per batch) — the honest cost of an
+    SCD2 sink on parquet, where closing a row rewrites its file. At
     warehouse scale the same foreachBatch body targets a format with
     row-level MERGE (Delta/Iceberg), turning the rewrite into
     O(touched files); the fold/dedupe logic above is unchanged."""
-    import os
-
-    from pyspark.sql.window import Window
-
-    from zoom_spark.operators.merge import scd2_close_and_insert
 
     def apply_batch(df: DataFrame, _epoch: int) -> None:
         spark = df.sparkSession
-        if os.path.exists(path):
+        attr_cols = [c for c in df.columns if c not in (key, ts_col)]
+        if sink_exists(spark, path):
             existing = spark.read.parquet(path)
         else:
-            existing = (
-                df.select(
-                    F.col(key),
-                    F.col(ts_col).alias("valid_from"),
-                    F.lit(open_end).cast("date").alias("valid_to"),
-                    *[
-                        c
-                        for c in df.columns
-                        if c not in (key, ts_col)
-                    ],
-                )
-                .limit(0)
-            )
+            existing = df.select(
+                key,
+                F.col(ts_col).alias("valid_from"),
+                F.lit(open_end).cast("date").alias("valid_to"),
+                *attr_cols,
+            ).limit(0)
         # versions within the batch apply in ts order; dedupe exact
         # (key, ts) replays so a re-delivered row is a no-op. The
         # tie-break inside a (key, ts) partition orders by the
         # REMAINING attribute columns — with only ts (constant in the
         # partition) the survivor among two conflicting same-(key,ts)
         # rows would be nondeterministic, not a replay no-op.
-        attr_cols = [c for c in df.columns if c not in (key, ts_col)]
         w = Window.partitionBy(key, ts_col).orderBy(
             *[F.col(c).asc_nulls_first() for c in attr_cols]
         )
@@ -538,22 +529,10 @@ def write_stream_scd2(
             # close-and-insert layers a join+union on the last, so a
             # timestamp-rich batch would otherwise build an
             # arbitrarily deep uncheckpointed plan before the single
-            # staging write (at warehouse scale: persist(DISK_ONLY)
+            # staged write (at warehouse scale: persist(DISK_ONLY)
             # or a checkpoint dir instead of localCheckpoint)
             if (i + 1) % 4 == 0:
                 table = table.localCheckpoint(eager=False)
-        staging = f"{path}.__staging__"
-        table.write.mode("overwrite").parquet(staging)
-        final = spark.read.parquet(staging)
-        final.write.mode("overwrite").parquet(path)
-        import shutil
+        replace_table(table, path)
 
-        shutil.rmtree(staging, ignore_errors=True)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream_df, apply_batch, checkpoint_dir)
