@@ -11,7 +11,12 @@ Checks per query:
   * no CartesianProduct unless the query is an intentional cross
     join;
   * WholeStageCodegen covers the plan (Python-free hot path), except
-    for intentional Arrow/pandas stages.
+    for intentional Arrow/pandas stages;
+  * no Scan ExistingRDD reads a Python RDD (README "No RDDs"): a
+    list-built createDataFrame runs Python-worker tasks on every scan,
+    and operators/local.local_frame builds the same frame as a
+    LocalTableScan. Checkpoint scans are ExistingRDD too, over the
+    checkpointed RDD, and are not flagged.
 
 Usage: python scripts/audit_plans.py [sf_dir]
 """
@@ -1289,6 +1294,10 @@ def audit(name: str, plan: str, exp: dict) -> list[str]:
         "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
     ):
         problems.append("unexpected cartesian/nested-loop join")
+    if re.search(
+        r"^Arguments: .* at applySchemaToPythonRDD at .*ExistingRDD", plan, re.M
+    ):
+        problems.append("Scan ExistingRDD over a Python RDD")
     # column pruning: lineitem scans should never read all 11 columns
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         cols = [c for c in m.group(1).split(",") if c]

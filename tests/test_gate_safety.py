@@ -252,3 +252,31 @@ def test_batch_writes_and_sink_probes_only_in_io():
             ):
                 bad.append(f"{rel}:{node.lineno} import shutil")
     assert not bad, f"sink write or local-FS probe outside io.py: {bad}"
+
+
+# --- one driver-side frame builder (operators/local.py) --------------
+
+
+def test_create_dataframe_only_in_local_frame():
+    """Only operators/local.py may call ``createDataFrame``. A list
+    argument plans as a pickled Python RDD (``Scan ExistingRDD``) whose
+    every scan runs Python-worker tasks; ``local_frame`` builds the
+    same frame through Arrow as a ``LocalRelation``. A ``pa.Table``
+    call elsewhere is refused too, so there is one construction path."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "zoom_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/local.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                bad.append(f"{rel}:{node.lineno}")
+    assert not bad, f"createDataFrame outside operators/local.py: {bad}"

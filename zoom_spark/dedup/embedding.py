@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zoom_spark.functions.vectors import cosine_with_norms, norm
+from zoom_spark.operators.local import local_frame
 from zoom_spark.similarity.knn import make_hyperplanes
 
 
@@ -80,7 +81,8 @@ def lsh_candidate_pairs(
     # analysis+codegen the dominant cost (~7 s fixed per query) and
     # the generated method exceeded JIT-friendly size.  As data, the
     # expression is three small higher-order loops.
-    planes_df = df.sparkSession.createDataFrame(
+    planes_df = local_frame(
+        df.sparkSession,
         [(planes,)], schema="planes array<array<double>>"
     )
     v = F.col("v")

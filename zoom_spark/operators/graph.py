@@ -19,6 +19,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zoom_spark.operators.local import local_frame
 from zoom_spark.operators.sizing import broadcaster, fits, frame_partitions
 
 # ord key = degree * ORD_BASE + node_id: a single BIGINT total order
@@ -169,7 +170,7 @@ def pagerank(
     quant = float(10**quantize_dp) if quantize_dp is not None else None
     if n_edges == 0:
         node_type = edges.schema[src].dataType.simpleString()
-        return spark.createDataFrame([], f"node {node_type}, rank double")
+        return local_frame(spark, [], f"node {node_type}, rank double")
     if fits(2 * n_edges, 24):
         t = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).toArrow()
         ends = np.concatenate(
@@ -189,7 +190,7 @@ def pagerank(
             )
             if quant is not None:
                 r = np.floor(r * quant + 0.5) / quant
-        return spark.createDataFrame(pa.table({"node": nodes, "rank": r}))
+        return local_frame(spark, pa.table({"node": nodes, "rank": r}))
     directed = edges.select(
         F.col(src).alias("from"), F.col(dst).alias("to")
     ).unionAll(edges.select(F.col(dst).alias("from"), F.col(src).alias("to")))

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from zoom_spark.operators.local import local_frame
+
 
 def prefix_sum(
     df: DataFrame,
@@ -138,7 +140,8 @@ def prefix_sum(
     schema = "_pid int, " + ", ".join(
         f"_offset{i} {t}" for i, t in enumerate(off_types)
     )
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        spark,
         [
             (pid, *[casts[i](off[i]) for i in range(len(vcols))])
             for pid, off in offsets.items()
@@ -200,7 +203,8 @@ def prefix_max(
         if r["_tot"] is not None:
             running = r["_tot"] if running is None else max(running, r["_tot"])
     spark = df.sparkSession
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        spark,
         [(pid, off) for pid, off in offsets.items()], "_pid int, _offset bigint"
     )
     # greatest() skips NULLs, so a NULL local-exclusive-max (first row
@@ -262,7 +266,8 @@ def global_row_number(
         running += r["_n"]
     if count_out is not None:
         count_out.append(running)
-    off_df = df.sparkSession.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         [(pid, off) for pid, off in offsets.items()], "_pid int, _offset bigint"
     )
     return (
@@ -347,7 +352,8 @@ def global_dense_rank(
         have_prev = True
     if count_out is not None:
         count_out.append(running)
-    off_df = df.sparkSession.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         [(pid, off) for pid, off in offsets.items()], "_pid int, _offset bigint"
     )
     return (
@@ -468,7 +474,8 @@ def grouped_rank(
             StructField("_doff", LongType(), False),
         ]
     )
-    off_df = df.sparkSession.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         [(k[0], *k[1:], off[0], off[1]) for k, off in offsets.items()],
         off_schema,
     )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from zoom_spark.functions.text import ws_tokens
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 
@@ -600,7 +601,8 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fp = seq.groupBy("t").agg(F.min("rn").alias("firstpos"))
     nn = seq.agg(F.count("*").cast("bigint").alias("n"))
-    ks = spark.createDataFrame(
+    ks = local_frame(
+        spark,
         [(k,) for k in range(1, HEAPS_POINTS + 1)], "k bigint"
     )
     grid = ks.crossJoin(F.broadcast(nn)).select(

@@ -412,6 +412,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zoom_spark.similarity.kmeans import (
         int_assign,
+        int_centroid_stats,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -453,16 +454,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    cstats = F.broadcast(
-        emb.sparkSession.createDataFrame(
-            [(
-                [c for _, c in cents],
-                [sum(x * x for x in c) for _, c in cents],
-                [cid for cid, _ in cents],
-            )],
-            "cmat array<array<long>>, cn2 array<long>, cid array<int>",
-        )
-    )
+    cstats = int_centroid_stats(spark, cents)
     q = base.crossJoin(cstats).select(
         F.col("id").alias("q_id"),
         F.explode(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -238,7 +239,7 @@ def ljung_box_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rn", (F.col("rev") - F.col("mu")).alias("dv")
     )
     den = dev.agg(F.round(F.sum(F.col("dv") * F.col("dv")), 8).alias("s0"))
-    lags = spark.createDataFrame([(k,) for k in range(1, LB_LAGS + 1)], "k bigint")
+    lags = local_frame(spark, [(k,) for k in range(1, LB_LAGS + 1)], "k bigint")
     a = dev.select(F.col("rn").alias("arn"), F.col("dv").alias("adv"))
     b = dev.select(F.col("rn").alias("brn"), F.col("dv").alias("bdv"))
     num = (

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 # H0: purchase share p0 vs H1: p1, alpha = beta = 0.05
@@ -478,7 +479,7 @@ def bayes_ab_prob_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("k", "lf")
         .unionAll(
-            spark.createDataFrame([(0, 0.0)], "k bigint, lf double")
+            local_frame(spark, [(0, 0.0)], "k bigint, lf double")
         )
         .localCheckpoint(eager=False)
     )
@@ -627,7 +628,7 @@ def median_ci_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lnf = (
         prefix_sum(lnk, "k", "lnk", out_col="lf", known_range=(1, n_val))
         .select("k", "lf")
-        .unionAll(spark.createDataFrame([(0, 0.0)], "k bigint, lf double"))
+        .unionAll(local_frame(spark, [(0, 0.0)], "k bigint, lf double"))
         .localCheckpoint(eager=False)
     )
     js = ks.select((F.col("k") - 1).alias("j")).unionAll(
@@ -800,7 +801,7 @@ def fisher_exact_weekend_purchase(
     lnf = (
         prefix_sum(lnk, "k", "lnk", out_col="lf", known_range=(1, n_val))
         .select("k", "lf")
-        .unionAll(spark.createDataFrame([(0, 0.0)], "k bigint, lf double"))
+        .unionAll(local_frame(spark, [(0, 0.0)], "k bigint, lf double"))
         .localCheckpoint(eager=False)
     )
     marg = cnt.select(
@@ -820,7 +821,7 @@ def fisher_exact_weekend_purchase(
             "i_hi"
         ),
     )
-    zero = spark.createDataFrame([(0,)], "k bigint")
+    zero = local_frame(spark, [(0,)], "k bigint")
     keys = (
         ks.unionAll(zero)
         .crossJoin(F.broadcast(marg))
@@ -965,7 +966,8 @@ def hoeffding_confidence_sequence(
         out_col="rn",
     ).select("rn", "x")
     nn = seq.agg(F.count("*").cast("bigint").alias("n"))
-    ck = spark.createDataFrame(
+    ck = local_frame(
+        spark,
         [(k, CS_LNC[k]) for k in range(1, CS_POINTS + 1)], "k bigint, lnc double"
     )
     grid = ck.crossJoin(F.broadcast(nn)).select(

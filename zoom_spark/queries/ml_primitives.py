@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 # entropy helper fragments shared textually by both engines:
@@ -515,7 +516,7 @@ def shapley_channel_attribution(
         )
     )
     bym = touch.groupBy("mask").agg(F.count("*").cast("bigint").alias("cnt"))
-    smasks = spark.createDataFrame([(s,) for s in range(8)], "smask bigint")
+    smasks = local_frame(spark, [(s,) for s in range(8)], "smask bigint")
     vals = (
         smasks.crossJoin(F.broadcast(bym))
         .groupBy("smask")

@@ -1533,6 +1533,7 @@ def dunn_index_int_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from zoom_spark.similarity.kmeans import (
         int_assign,
+        int_centroid_stats,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -1557,16 +1558,7 @@ def dunn_index_int_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    cstats = F.broadcast(
-        emb.sparkSession.createDataFrame(
-            [(
-                [c for _, c in cents],
-                [sum(x * x for x in c) for _, c in cents],
-                [cid for cid, _ in cents],
-            )],
-            "cmat array<array<long>>, cn2 array<long>, cid array<int>",
-        )
-    )
+    cstats = int_centroid_stats(spark, cents)
     assigned = int_assign(base, cents)
     idx = F.array_position(
         F.col("cid"), F.col("cell")

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 
@@ -2824,7 +2825,8 @@ def spectral_entropy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
         F.sum("y").cast("long").alias("s"),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(p,) for p in _SPEC_PERIODS], "period int"
     )
     centered = F.col("n").cast("double") * F.col("y") - F.col("s")
@@ -3037,7 +3039,7 @@ def dfa_alpha_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    grid = spark.createDataFrame([(b,) for b in _DFA_BOXES], "b int")
+    grid = local_frame(spark, [(b,) for b in _DFA_BOXES], "b int")
     boxed = prof.crossJoin(F.broadcast(grid)).select(
         "b",
         F.floor((F.col("t") - 1) / F.col("b")).cast("long").alias("box"),

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 # Abramowitz-Stegun 7.1.26 erf polynomial (repo-shared constants,
@@ -5500,9 +5501,7 @@ def var_cvar_revenue_changes(
         F.row_number().over(Window.orderBy("chg")).cast("long").alias("rn"),
         F.count("*").over(wn).cast("long").alias("n"),
     )
-    alphas = (
-        spark.createDataFrame([(0.05,), (0.01,)], ["alpha"])
-    )
+    alphas = local_frame(spark, [(0.05,), (0.01,)], "alpha double")
     k = F.ceil(F.col("alpha") * F.col("n")).cast("long")
     q = (
         r.crossJoin(F.broadcast(alphas))
@@ -6663,7 +6662,8 @@ def classical_mds_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in nations
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out, "nation long, coord1 double, coord2 double, "
         "eigval1 double, eigval2 double"
     ).orderBy("nation")
@@ -8554,13 +8554,14 @@ def rarefaction_curve_sources(
         prefix_sum(lnk, "k", "lnk", out_col="lf", known_range=(1, n_tok))
         .select("k", "lf")
         .unionAll(
-            spark.createDataFrame([(0, 0.0)], "k bigint, lf double")
+            local_frame(spark, [(0, 0.0)], "k bigint, lf double")
         )
         .localCheckpoint(eager=False)
     )
     grid = ntot.crossJoin(
         F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [("quarter",), ("half",)], "lab string"
             )
         )

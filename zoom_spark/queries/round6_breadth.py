@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 AA_TOPK = 50
@@ -964,7 +965,8 @@ def sorted_neighborhood_pairs(
     rk = global_row_number(nm, ["p_name"], out_col="rn").select(
         "p_name", "rn"
     )
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         [(k,) for k in range(1, SNM_WINDOW + 1)], "k bigint"
     )
     a = rk.select(F.col("p_name").alias("name_a"), F.col("rn").alias("ra"))

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 # The scan predicate the zone-map stage evaluates (orders ingest-month
@@ -1396,7 +1397,8 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         nxt = mmr.orderBy(F.col("mmr").desc(), "vec_id").first()
         selected.append((nxt["vec_id"], float(nxt["mmr"])))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (rank + 1, vid, score)
             for rank, (vid, score) in enumerate(selected)
@@ -1605,7 +1607,7 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", (F.col("rev") - F.col("m")).alias("dv")
     ).localCheckpoint(eager=False)
     den = dev.agg(F.sum(F.col("dv") * F.col("dv")).alias("d0"))
-    lags = spark.createDataFrame([(1,), (2,), (3,)], "lag int")
+    lags = local_frame(spark, [(1,), (2,), (3,)], "lag int")
     a, b = dev.alias("a"), dev.alias("b")
     rk = (
         a.crossJoin(F.broadcast(lags))
@@ -4010,7 +4012,8 @@ def hurst_exponent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(Window.orderBy("day")) - 1).alias("k"),
     ).localCheckpoint(eager=False)
     n = daily.count()
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(w,) for w in HURST_WINDOWS], "w int"
     )
     blocks = (
@@ -4267,7 +4270,8 @@ def periodogram_fixed_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("rev"), 6).alias("m"),
         F.count("*").cast("bigint").alias("n"),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(p,) for p in PGRAM_PERIODS], "period int"
     )
     ang = 2 * math.pi * F.col("t") / F.col("period")
@@ -4950,7 +4954,7 @@ def variance_ratio_test_revenue(
         F.round(F.var_samp("d"), 4).alias("v1"),
         F.count("*").cast("bigint").alias("n1"),
     )
-    grid = spark.createDataFrame([(q,) for q in VR_Q], "q int")
+    grid = local_frame(spark, [(q,) for q in VR_Q], "q int")
     rq = (
         a.crossJoin(F.broadcast(grid))
         .join(b, F.col("b.k") == F.col("a.k") - F.col("q"))
@@ -5470,7 +5474,8 @@ def poissonness_basket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n_k"))
     )
     tot = hist.agg(F.sum("n_k").cast("bigint").alias("n"))
-    facts = spark.createDataFrame(
+    facts = local_frame(
+        spark,
         [(k, float(f)) for k, f in enumerate(_FACTS)], "k bigint, kfact double"
     )
     pts = (

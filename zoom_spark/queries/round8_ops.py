@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 
@@ -184,7 +185,8 @@ def dagostino_k2_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
          ** (1.0 / 3.0))
         / math.sqrt(2.0 / (9.0 * aa))
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             int(n),
             snap6(g1),
@@ -396,7 +398,8 @@ def generalized_esd_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = cur.where(F.col("day") != F.lit(top["day"])).localCheckpoint(
             eager=False
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "iteration int, out_day date, out_rev double, r_stat double, "
         "n_remaining bigint",

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 from zoom_spark.similarity.knn import brute_force_topk, lsh_bucketed_topk
 
@@ -237,7 +238,8 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc + x,
     )
     pstats = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(planes,)], "pmat array<array<long>>"
         )
     )
@@ -391,6 +393,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zoom_spark.similarity.kmeans import (
         int_assign,
+        int_centroid_stats,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -418,17 +421,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-query probe list: exact integer L2 score against every
     # centroid (the same one-row broadcast-matrix fold as int_assign,
     # keeping Catalyst's plan O(1) in k), rank, keep n_probe
-    spark_ = emb.sparkSession
-    cstats = F.broadcast(
-        spark_.createDataFrame(
-            [(
-                [c for _, c in cents],
-                [sum(x * x for x in c) for _, c in cents],
-                [cid for cid, _ in cents],
-            )],
-            "cmat array<array<long>>, cn2 array<long>, cid array<int>",
-        )
-    )
+    cstats = int_centroid_stats(spark, cents)
     q = base.where(F.col("id") < N_QUERIES).crossJoin(cstats).select(
         F.col("id").alias("q_id"),
         F.explode(
@@ -741,7 +734,8 @@ def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = Non
         cn2 = [[sum(x * x for x in cb[(s, c)]) for c in cells_by_sub[s]] for s in subs]
         cid3 = [cells_by_sub[s] for s in subs]
         cstats = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(cmat3, cn2, cid3)],
                 "cmat3 array<array<array<long>>>, "
                 "cn2 array<array<long>>, cid3 array<array<int>>",
@@ -770,7 +764,7 @@ def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = Non
             for dd, cv in enumerate(vec)
         ]
         return F.broadcast(
-            spark.createDataFrame(rows, "sub int, cell int, dd int, cv long")
+            local_frame(spark, rows, "sub int, cell int, dd int, cv long")
         )
 
     if cache_key is not None:
@@ -1047,6 +1041,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zoom_spark.similarity.kmeans import (
         int_assign,
+        int_centroid_stats,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -1061,9 +1056,9 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", PQ_QSCALE),
     )
     assigned = int_assign(base, cents).localCheckpoint(eager=False)
-    spark_ = emb.sparkSession
     cdim = F.broadcast(
-        spark_.createDataFrame(
+        local_frame(
+            spark,
             [
                 (cid, d, int(cv))
                 for cid, c in cents
@@ -1094,16 +1089,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cache_key=(_os.path.realpath(sf_dir), "ivfpq-rdim", PQ_QSCALE),
     )
     # per-query probe list: exact integer L2 vs the coarse centroids
-    cstats = F.broadcast(
-        spark_.createDataFrame(
-            [(
-                [c for _, c in cents],
-                [sum(x * x for x in c) for _, c in cents],
-                [cid for cid, _ in cents],
-            )],
-            "cmat array<array<long>>, cn2 array<long>, cid array<int>",
-        )
-    )
+    cstats = int_centroid_stats(spark, cents)
     dotl = lambda u, v: F.aggregate(  # noqa: E731
         F.zip_with(u, v, lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -1349,7 +1335,8 @@ def frequent_directions_spectrum(
         (int(i + 1), float(round(sv, 4)), float(round(c, 6)))
         for i, (sv, c) in enumerate(zip(s, cum))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "rank_idx int, singular_value double, cum_energy double"
     )
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.io import load_table
+from zoom_spark.operators.local import local_frame
 from zoom_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -1052,7 +1053,8 @@ def logreg_purchase_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         # any failure in the GD collect loop must not leak the cached
         # frame for the session's lifetime
         feats.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(n),
@@ -3638,7 +3640,8 @@ def prf_at_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
-    th = spark.createDataFrame(
+    th = local_frame(
+        spark,
         [(float(t),) for t in PRF_THRESHOLDS], "thr double"
     )
     cm = (
@@ -4282,7 +4285,7 @@ def revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = od.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.round(F.sum("o_totalprice"), 2).alias("rev"))
-    lags = spark.createDataFrame([(k,) for k in ACF_LAGS], "lag int")
+    lags = local_frame(spark, [(k,) for k in ACF_LAGS], "lag int")
     a = daily.alias("a")
     b = daily.alias("b")
     paired = (

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zoom_spark.operators.local import local_frame
+
 
 def fd_reduce(rows: np.ndarray, ell: int) -> np.ndarray:
     """Sketch the rows (m×d) down to at most ``ell`` rows with one
@@ -140,7 +142,8 @@ def random_project(
     d_in = len(df.select(vec_col).first()[0])
     mat = achlioptas_matrix(d_in, d_out)
     pm = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [(mat,)], "pmat array<array<double>>"
         )
     )

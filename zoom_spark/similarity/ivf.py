@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zoom_spark.functions.vectors import cosine_with_norms, dot, norm
+from zoom_spark.operators.local import local_frame
 
 
 def sample_centroids(
@@ -65,7 +66,8 @@ def _with_centroid_sims(
     literal plan vs milliseconds to execute it); the matrix-column
     form keeps the plan O(1)-sized regardless of C."""
     cmat = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [([_unit(c) for c in centroids],)], "cmat array<array<double>>"
         )
     )

@@ -4,8 +4,8 @@ operator for corpus bucketing / domain discovery).
 
 Scale design (the part that matters at 100 TB):
   * E-step (assignment) is the map-side argmax projection from
-    ivf.assign_cells — centroids ride along as literal arrays (model
-    weights), no shuffle;
+    ivf.assign_cells — centroids ride along as a one-row broadcast
+    LocalRelation (model weights), no shuffle;
   * M-step (new centroids) is TWO-PHASE: each input partition reduces
     to at most K partial rows (per-cell vector sum + count) inside an
     Arrow-batched mapInPandas pass, and only those K·num_partitions
@@ -31,10 +31,11 @@ import numpy as np
 import pandas as pd
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.functions.vectors import dot
+from zoom_spark.operators.local import local_frame
 from zoom_spark.similarity.ivf import sample_centroids
 
 
@@ -42,13 +43,14 @@ def _assign(df: DataFrame, vec_col: str, id_col: str, centroids) -> DataFrame:
     """(id, vec, cell, dist2) — nearest centroid by squared L2
     distance. ||v - c||² = ||v||² - 2·v·c + ||c||²; the argmin only
     needs (-2·v·c + ||c||²), computed as one fold per centroid."""
-    # centroid matrix + per-centroid ||c||^2 ride in as one-row
-    # broadcast columns; the score array is a higher-order zip over
-    # them. NOT literal arrays: a k x dim literal tree makes Catalyst
-    # analysis the per-iteration bottleneck (same fix as
-    # ivf._with_centroid_sims — Lloyd pays it EVERY iteration).
+    # centroid matrix + per-centroid ||c||^2 ride in as a one-row
+    # broadcast LocalRelation; the score array is a higher-order zip
+    # over its columns. NOT literal arrays: a k x dim literal tree
+    # makes Catalyst analysis the per-iteration bottleneck (same fix
+    # as ivf._with_centroid_sims — Lloyd pays it EVERY iteration).
     cstats = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [(
                 [[float(x) for x in c] for c in centroids],
                 [float(sum(x * x for x in c)) for c in centroids],
@@ -176,13 +178,17 @@ def int_quantize(df: DataFrame, vec_col: str, id_col: str, qscale: int) -> DataF
     )
 
 
-def int_assign(base: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
-    """(id, vec, cell) nearest-centroid assignment over integer
-    vectors: score_j = -2*v.c_j + ||c_j||^2 in exact long arithmetic;
-    ties break to the lowest cell id (cents must be sorted)."""
-    spark = base.sparkSession
-    cstats = F.broadcast(
-        spark.createDataFrame(
+def int_centroid_stats(
+    spark: SparkSession, cents: list[tuple[int, list[int]]]
+) -> DataFrame:
+    """One-row broadcast ``(cmat array<array<long>>, cn2 array<long>,
+    cid array<int>)``: the integer centroids, their squared norms and
+    their cell ids, in ``cents`` order. Every integer-score fold over
+    fitted cells (assignment, IVF probe lists, Dunn index) crosses
+    this frame."""
+    return F.broadcast(
+        local_frame(
+            spark,
             [(
                 [c for _, c in cents],
                 [sum(x * x for x in c) for _, c in cents],
@@ -191,6 +197,13 @@ def int_assign(base: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame
             "cmat array<array<long>>, cn2 array<long>, cid array<int>",
         )
     )
+
+
+def int_assign(base: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
+    """(id, vec, cell) nearest-centroid assignment over integer
+    vectors: score_j = -2*v.c_j + ||c_j||^2 in exact long arithmetic;
+    ties break to the lowest cell id (cents must be sorted)."""
+    cstats = int_centroid_stats(base.sparkSession, cents)
     score = F.zip_with(
         F.col("cmat"),
         F.col("cn2"),

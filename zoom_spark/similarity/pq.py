@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from zoom_spark.operators.local import local_frame
 from zoom_spark.similarity.ivf import sample_centroids
 
 
@@ -307,7 +308,8 @@ def ivfpq_topk(
                 for j in range(m)
             ]
             rows.append((int(qid), int(cell), lut))
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         rows, "query_id int, cell int, lut array<array<double>>"
     )
     dist = F.aggregate(
