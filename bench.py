@@ -58,7 +58,7 @@ HEADLINE = [
     # round 2 additions
     "embedding_neardup_lsh",   # banded hyperplane-LSH near-dup (no crossJoin)
     "canonical_ids_chained",   # star CC on chain graph (oracle-hashed)
-    "multimodal_decode_wav_ppm",  # real WAV/PPM decode via mapInPandas
+    "multimodal_decode_wav_ppm",  # real WAV/PPM decode via mapInArrow
     "recursive_tree_depth",    # ANSI WITH RECURSIVE (UnionLoop)
     "weighted_sample_docs",    # A-ES weighted sampling (TakeOrdered)
     "unigram_logprob_quality", # unigram-LM quality filter (2-pass join)

@@ -10,8 +10,6 @@ Checks per query:
   * dimension joins execute as BroadcastHashJoin;
   * no CartesianProduct unless the query is an intentional cross
     join;
-  * WholeStageCodegen covers the plan (Python-free hot path), except
-    for intentional Arrow/pandas stages;
   * no Scan ExistingRDD reads a Python RDD (README "No RDDs"): a
     list-built createDataFrame runs Python-worker tasks on every scan,
     and operators/local.local_frame builds the same frame as a
@@ -25,8 +23,9 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from zoom_spark.session import get_spark  # noqa: E402

@@ -16,9 +16,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tests"))
 
 from oracle_harness import compare_query, duckdb_con  # noqa: E402
 
@@ -31,7 +33,7 @@ def _changed_names(qs: dict, base: str) -> set[str] | None:
     ``base`` in git (staged + unstaged). Returns None (= refuse to
     narrow) when a changed .py file is not a query module."""
     diff = subprocess.run(
-        ["git", "-C", "/root/repo", "diff", "--name-only", base, "--"],
+        ["git", "-C", str(ROOT), "diff", "--name-only", base, "--"],
         capture_output=True,
         text=True,
         check=True,
@@ -40,7 +42,7 @@ def _changed_names(qs: dict, base: str) -> set[str] | None:
     # query module would yield "nothing to sweep" — a false green on
     # exactly the code most likely to be wrong. Fold them in.
     diff += subprocess.run(
-        ["git", "-C", "/root/repo", "ls-files", "--others",
+        ["git", "-C", str(ROOT), "ls-files", "--others",
          "--exclude-standard"],
         capture_output=True,
         text=True,

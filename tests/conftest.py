@@ -1,11 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+TESTS = Path(__file__).resolve().parent
+sys.path.insert(0, str(TESTS.parent))
+sys.path.insert(0, str(TESTS))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,4 +1,4 @@
-"""Roundtrip + robustness tests for the pure-Python media codecs
+"""Roundtrip + robustness tests for the media codecs
 (X5 honest-decode path): what the oracle-gated query deliberately
 excludes (float sample statistics, malformed inputs, header
 tolerance) is proven here.
@@ -6,6 +6,7 @@ tolerance) is proven here.
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import pytest
@@ -15,8 +16,11 @@ from zoom_spark.multimodal.codecs import (
     decode_wav,
     encode_ppm,
     encode_wav,
+    resize_ppm,
     synth_ppm_bytes,
+    synth_ppm_video_bytes,
     synth_wav_bytes,
+    wav_segment_rms,
 )
 
 
@@ -118,6 +122,72 @@ def test_synth_fixture_matches_closed_form():
         )
 
 
+# sha256 digests of the codec outputs as the per-sample loop codecs
+# produced them. The numpy codecs must reproduce every byte, and every
+# decoded float bit for bit (repr round-trips a float exactly).
+CODEC_IDS = range(20000)
+STRIDED_IDS = range(0, 20000, 37)
+VIDEO_IDS = range(1000)
+CODEC_DIGESTS = {
+    "synth_wav_bytes": (
+        "af591fb26356802cad0b82a092e12f6b"
+        "1a32bfe63fad5ea038ece828f8016ecb"
+    ),
+    "synth_ppm_bytes": (
+        "3275ce875c17465045c95b44a1841ff0"
+        "ba4e0ad4e1e77e347152118321efe12a"
+    ),
+    "decode_wav": (
+        "ad5a0699c10d37c177f14619fef7b9c7"
+        "397e7f450b8ee4bcf7fac981317bd495"
+    ),
+    "decode_ppm": (
+        "f14bef1bc31e3a52848ee85827cfb1d8"
+        "d31ed3bcbb6756429600ca76bc8c7020"
+    ),
+    "wav_segment_rms": (
+        "fee082042e8b2e3d1ae49f7599347716"
+        "5bac259add45f53648a872fbc3b126bb"
+    ),
+    "resize_ppm_8x8": (
+        "af498db6150155678ee9fe1c7c2a4916"
+        "6e12755e5fdb39a3a540f773edd85141"
+    ),
+    "synth_ppm_video_bytes": (
+        "c6041b205ebc4cdf1f9f77784a4151da"
+        "dbddeaacc042d1ddcd06ce8d2bf13aea"
+    ),
+}
+
+
+def _sha(chunks) -> str:
+    h = hashlib.sha256()
+    for c in chunks:
+        h.update(c if isinstance(c, bytes) else repr(c).encode())
+    return h.hexdigest()
+
+
+def codec_digests() -> dict[str, str]:
+    wavs = [synth_wav_bytes(i) for i in CODEC_IDS]
+    ppms = [synth_ppm_bytes(i) for i in CODEC_IDS]
+    return {
+        "synth_wav_bytes": _sha(wavs),
+        "synth_ppm_bytes": _sha(ppms),
+        "decode_wav": _sha(sorted(decode_wav(b).items()) for b in wavs),
+        "decode_ppm": _sha(sorted(decode_ppm(b).items()) for b in ppms),
+        "wav_segment_rms": _sha(
+            [sorted(s.items()) for s in wav_segment_rms(wavs[i])]
+            for i in STRIDED_IDS
+        ),
+        "resize_ppm_8x8": _sha(resize_ppm(ppms[i], 8, 8) for i in STRIDED_IDS),
+        "synth_ppm_video_bytes": _sha(synth_ppm_video_bytes(i) for i in VIDEO_IDS),
+    }
+
+
+def test_codec_outputs_match_pinned_digests():
+    assert codec_digests() == CODEC_DIGESTS
+
+
 def test_ppm_resize_real_nearest_neighbor():
     """resize_ppm samples exactly src = floor(dst*in/out) and
     re-encodes a valid container (decode of the output succeeds and
@@ -175,6 +245,43 @@ def test_decode_media_permissive_quarantines_bad_blobs(spark):
     # both the corrupt blob and the unsupported format must abort
     with _pytest.raises(Exception, match="RIFF|no pure-Python decoder"):
         decode_media(media, permissive=False).collect()
+
+
+def test_decode_wav_ppm_runs_one_task_per_scan_split(spark):
+    """multimodal_decode_wav_ppm is two mapInArrow stages straight over
+    the documents scan: no Exchange, so one Spark task per scan split
+    runs both Python stages (one task and 2 Python tasks at sf0.001).
+    A spread_scan or another Python stage coming back fails this; with
+    the spread over the 8-core test session the query ran 9 tasks."""
+    import uuid
+
+    from tests.conftest import SF_DIR
+    from zoom_spark.io import load_table
+    from zoom_spark.queries.multimodal_queries import multimodal_decode_wav_ppm
+
+    df = multimodal_decode_wav_ppm(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "MapInPandas" not in plan, plan
+    assert plan.count("MapInArrow") == 2, plan
+
+    docs = load_table(spark, SF_DIR, "documents")
+    n_docs, splits = docs.count(), docs.rdd.getNumPartitions()
+    sc = spark.sparkContext
+    group = f"decode-tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "decode task count")
+    try:
+        assert len(df.collect()) == n_docs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert len(stages) == 1, [(s.stageId, s.numTasks) for s in stages]
+    assert sum(s.numTasks for s in stages) <= splits
 
 
 # --- concatenated-PPM video container -------------------------------------

@@ -1,4 +1,4 @@
-"""Hypothesis property tests for the pure-Python media codecs:
+"""Hypothesis property tests for the media codecs:
 roundtrip invariants over GENERATED inputs, not just the fixture
 shapes the oracle gate uses. Driver-side only (no Spark) — runs in
 milliseconds per example.

@@ -4,6 +4,7 @@ inertia monotonicity + exact recovery of separated blobs)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -59,3 +60,34 @@ def test_kmeans_assign_bounds(spark):
     bad = got.where((F.col("cell") < 0) | (F.col("cell") >= 5)).count()
     assert bad == 0
     assert got.where(F.col("dist2") < -1e-6).count() == 0
+
+
+def _inline_int_dot(u, v):
+    """The integer dot fold as each caller spelled it before
+    kmeans.int_dot: the reference the helper's plans are held to."""
+    return F.aggregate(
+        F.zip_with(u, v, lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+@pytest.mark.parametrize("name", ["knn_ivf", "dunn_index_int_cells"])
+def test_int_dot_plans_same_result_as_inline_fold(spark, monkeypatch, name):
+    """A query built through kmeans.int_dot optimizes to a plan with
+    the same result as one built with the inline fold. Local
+    checkpoints are left out of both builds: each would be a fresh
+    RDD, and two RDD scans never compare equal."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    import zoom_spark.similarity.kmeans as km
+    from zoom_spark.queries import round10_ops, similarity_queries
+
+    query = getattr(similarity_queries, name, None) or getattr(round10_ops, name)
+    monkeypatch.setattr(
+        ClassicDataFrame, "localCheckpoint", lambda self, eager=True: self
+    )
+    new = query(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
+    monkeypatch.setattr(km, "int_dot", _inline_int_dot)
+    old = query(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
+    assert new.sameResult(old)

@@ -1,10 +1,17 @@
 """Multimodal column plumbing (X5): image/audio/video as opaque
-binary columns + typed metadata, with decode/feature-extraction as
-Arrow-batched mapInPandas stages.
+binary columns + typed metadata, with synthesis, decode and feature
+extraction as Arrow-batched Python stages.
 
-Decoding is REAL for WAV (RIFF/PCM) and PPM (P6) via the pure-Python
-codecs in codecs.py — `decode_media` parses genuine container bytes
-and its outputs are oracle-gated (multimodal_decode_wav_ppm).
+`synthesize_media_fixture` and `decode_media` are mapInArrow stages:
+they read RecordBatch columns as Python lists and build their output
+batches with `operators.local.arrow_rows`, so no pandas frame is
+built per batch. The other stages (resize, frames, envelope,
+spectral, pitch, stub features) are still mapInPandas.
+
+Decoding is REAL for WAV (RIFF/PCM) and PPM (P6) via the codecs in
+codecs.py (Python header parsing, numpy payload math) — `decode_media`
+parses genuine container bytes and its outputs are oracle-gated
+(multimodal_decode_wav_ppm).
 Formats whose codecs need PIL/soundfile/pyav (JPEG, PNG, MP3, MP4)
 still raise from `decode_real`; `decode_stub` remains as the
 deterministic fake for plumbing tests of arbitrary payloads. The
@@ -22,6 +29,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -88,8 +96,8 @@ def decode_stub(content: bytes, media_type: str, n_features: int = 8) -> list[fl
 
 
 def decode_real(content: bytes, media_type: str) -> dict:
-    """Real byte-level decoding for the formats parseable with the
-    standard library alone: RIFF/WAVE PCM (`audio/wav`) and binary
+    """Real byte-level decoding for the formats parseable without a
+    codec library: RIFF/WAVE PCM (`audio/wav`) and binary
     PPM (`image/ppm`) — see codecs.py.  Formats that require PIL /
     soundfile / pyav (JPEG, PNG, MP3, MP4) still raise: their codecs
     are not reimplementable here and arrive with those libraries in a
@@ -149,6 +157,15 @@ DECODED_SCHEMA = StructType(
 )
 
 
+SYNTH_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("content", BinaryType()),
+        StructField("media_type", StringType()),
+    ]
+)
+
+
 def synthesize_media_fixture(ids: DataFrame, id_col: str) -> DataFrame:
     """Executor-side media synthesis: even ids encode a sine-burst
     WAV, odd ids a gradient PPM (deterministic per id — see
@@ -156,47 +173,37 @@ def synthesize_media_fixture(ids: DataFrame, id_col: str) -> DataFrame:
     container bytes; at scale this stage is the 'fetch blobs' scan
     and the synthesis stands in for object-store reads."""
     from zoom_spark.multimodal.codecs import synth_ppm_bytes, synth_wav_bytes
+    from zoom_spark.operators.local import arrow_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(i) for i in pdf["media_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids_,
-                    "content": [
-                        synth_wav_bytes(i) if i % 2 == 0 else synth_ppm_bytes(i)
-                        for i in ids_
-                    ],
-                    "media_type": [
-                        "audio/wav" if i % 2 == 0 else "image/ppm" for i in ids_
-                    ],
-                }
-            )
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [
+                (i, synth_wav_bytes(i), "audio/wav")
+                if i % 2 == 0
+                else (i, synth_ppm_bytes(i), "image/ppm")
+                for i in batch.column("media_id").to_pylist()
+            ]
+            yield from arrow_rows(rows, SYNTH_SCHEMA).to_batches()
 
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("content", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    # r13 note: spreading the id scan HERE was measured and reverted —
-    # it wins only when the downstream codec work is heavy (WAV synth +
-    # decode: 3.0 -> 1.7 s) and loses on the cheap PPM-only resize path
-    # (0.6 -> 2.1 s: 3 chained mapInPandas stages x 32 tiny Arrow
-    # batches cost more than the serial synth). Heavy callers spread
-    # their pruned id scan BEFORE calling (multimodal_decode_wav_ppm).
-    return ids.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        run, schema=schema
+    # No spread_scan here or in the callers: every Python task costs
+    # about 0.2 worker CPU-s whatever its row count (PySpark's per-task
+    # setup invalidates the import caches, and each zipimporter then
+    # re-reads pyspark.zip), while the numpy codecs make the per-row
+    # work small. Spreading a single-split scan over 4 partitions ran
+    # 8 Python tasks for this stage and decode_media's instead of 2.
+    # At production scale the scan already yields >= cores splits, so
+    # the spread gained nothing there either.
+    return ids.select(F.col(id_col).cast("long").alias("media_id")).mapInArrow(
+        run, schema=SYNTH_SCHEMA
     )
 
 
 def decode_media(media: DataFrame, permissive: bool = False) -> DataFrame:
     """Arrow-batched REAL decode: parses each row's container bytes
-    with the format's pure-Python codec (decode_real dispatch) and
-    emits typed per-format fields (NULL where inapplicable).  This is
-    the honest counterpart of extract_features' stub path — header
-    fields and statistics come from actually walking the bytes.
+    with the format's codec (decode_real dispatch) and emits typed
+    per-format fields (NULL where inapplicable).  This is the honest
+    counterpart of extract_features' stub path — header fields and
+    statistics come from actually walking the bytes.
 
     ``permissive=True`` is the 100 TB posture (same design as the
     fetcher's S15 error channel): a corrupt or unsupported blob
@@ -204,49 +211,28 @@ def decode_media(media: DataFrame, permissive: bool = False) -> DataFrame:
     instead of failing the task — one bad object out of a billion
     must not kill a ten-hour job, and error rows stay queryable for
     quarantine/retry."""
+    from zoom_spark.operators.local import arrow_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    fields = DECODED_SCHEMA.names[3:-1]  # between byte_len and error
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for mid, c, mt in zip(
-                pdf["media_id"], pdf["content"], pdf["media_type"]
-            ):
-                raw = bytes(c)
-                base = {
-                    "media_id": int(mid),
-                    "media_type": mt,
-                    "byte_len": len(raw),
-                    "n_channels": None,
-                    "sample_rate": None,
-                    "width": None,
-                    "height": None,
-                    "n_units": None,
-                    "sum_pixels": None,
-                    "rms_val": None,
-                    "error": None,
-                }
+            # columns in the select's order: media_id, content, media_type
+            for mid, raw, mt in zip(*(c.to_pylist() for c in batch.columns)):
+                n_bytes = len(raw)
                 try:
                     d = decode_real(raw, mt)
                 except Exception as exc:  # noqa: BLE001 — quarantined below
                     if not permissive:
                         raise
-                    rows.append(base | {"error": f"{type(exc).__name__}: {exc}"})
+                    error = f"{type(exc).__name__}: {exc}"
+                    rows.append((mid, mt, n_bytes, *[None] * len(fields), error))
                     continue
-                rows.append(
-                    base
-                    | {
-                        "n_channels": d.get("n_channels"),
-                        "sample_rate": d.get("sample_rate"),
-                        "width": d.get("width"),
-                        "height": d.get("height"),
-                        "n_units": d["n_units"],
-                        "sum_pixels": d.get("sum_pixels"),
-                        "rms_val": d.get("rms_val"),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA])
+                rows.append((mid, mt, n_bytes, *[d.get(k) for k in fields], None))
+            yield from arrow_rows(rows, DECODED_SCHEMA).to_batches()
 
-    return media.select("media_id", "content", "media_type").mapInPandas(
+    return media.select("media_id", "content", "media_type").mapInArrow(
         run, schema=DECODED_SCHEMA
     )
 

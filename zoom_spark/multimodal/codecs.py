@@ -1,13 +1,16 @@
-"""Pure-Python media codecs (X5): honest byte-level decode for the
-two formats whose specs are simple enough to parse with the standard
-library alone — RIFF/WAVE PCM audio and binary PPM (P6) images.
+"""Media codecs (X5): honest byte-level decode for the two formats
+whose specs are simple enough to parse without a codec library —
+RIFF/WAVE PCM audio and binary PPM (P6) images. Header parsing (magic,
+chunk walk, ASCII header fields) is Python; the payload math (PCM
+samples, pixel sums, resampling, fixture synthesis) is numpy over the
+whole payload, exact in int64 where the output is an integer.
 
 Round 1 stubbed ALL decoding because the container has no PIL /
 soundfile / ffmpeg (judge finding: "real decode is a
 NotImplementedError stub").  These parsers close that gap for one
 audio and one image format: real container parsing (magic, chunk
 walk, header fields, payload extraction) and real sample/pixel math,
-so the mapInPandas decode path is exercised end-to-end on genuine
+so the Arrow-batched decode path is exercised end-to-end on genuine
 media bytes.  Formats beyond WAV/PPM still raise — their codecs
 (JPEG entropy coding, MP3 psychoacoustics) are not reimplementable
 here and arrive via PIL/pyav in a real deployment.
@@ -16,8 +19,8 @@ Encoders exist so the pipeline can SYNTHESIZE deterministic fixtures
 distributedly (each executor builds its rows' payloads from the row
 id — no driver-side blob generation, no test-asset files).
 
-Both codecs operate on bytes in memory — the executor-side unit a
-mapInPandas batch hands us at any scale.
+Both codecs operate on bytes in memory — the executor-side unit an
+Arrow batch hands us at any scale.
 """
 
 from __future__ import annotations
@@ -25,21 +28,22 @@ from __future__ import annotations
 import math
 import struct
 
+import numpy as np
+
 
 # --- RIFF/WAVE (PCM 16-bit little-endian) ---------------------------------
 
 def encode_wav(
-    samples: list[float],
+    samples: np.ndarray,
     sample_rate: int,
     n_channels: int = 1,
 ) -> bytes:
     """Minimal canonical WAV: RIFF header + fmt chunk (PCM, 16-bit)
-    + data chunk.  `samples` are floats in [-1, 1], interleaved if
-    multi-channel."""
-    pcm = b"".join(
-        struct.pack("<h", max(-32768, min(32767, int(round(s * 32767.0)))))
-        for s in samples
-    )
+    + data chunk.  `samples` (any float array-like) are in [-1, 1],
+    interleaved if multi-channel; quantization rounds half to even,
+    as Python's `round` does."""
+    scaled = np.asarray(samples, dtype=np.float64) * 32767.0
+    pcm = np.clip(np.rint(scaled), -32768, 32767).astype("<i2").tobytes()
     byte_rate = sample_rate * n_channels * 2
     block_align = n_channels * 2
     fmt = struct.pack(
@@ -60,9 +64,10 @@ def encode_wav(
     )
 
 
-def _parse_wav_pcm16(content: bytes) -> tuple[tuple, tuple[int, ...]]:
+def _parse_wav_pcm16(content: bytes) -> tuple[tuple, np.ndarray]:
     """Shared RIFF chunk walk + PCM-16 validation: returns (fmt tuple,
-    decoded int16 samples). Single source of truth for decode_wav and
+    the interleaved samples as an int64 array, so sums and sums of
+    squares are exact integers). Single source of truth for decode_wav and
     wav_segment_rms — the chunk-walk logic must never drift between
     the whole-clip and windowed paths."""
     if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
@@ -82,8 +87,7 @@ def _parse_wav_pcm16(content: bytes) -> tuple[tuple, tuple[int, ...]]:
     audio_format, bits = fmt[0], fmt[5]
     if audio_format != 1 or bits != 16:
         raise ValueError(f"only PCM-16 supported (fmt={audio_format}, bits={bits})")
-    n = len(data) // 2
-    return fmt, struct.unpack(f"<{n}h", data[: n * 2])
+    return fmt, np.frombuffer(data, "<i2", count=len(data) // 2).astype(np.int64)
 
 
 def decode_wav(content: bytes) -> dict:
@@ -94,9 +98,9 @@ def decode_wav(content: bytes) -> dict:
     n_channels, sample_rate = fmt[1], fmt[2]
     n = len(samples)
     n_frames = n // max(1, n_channels)
-    mean = sum(samples) / n / 32767.0 if n else 0.0
-    rms = math.sqrt(sum(s * s for s in samples) / n) / 32767.0 if n else 0.0
-    peak = max((abs(s) for s in samples), default=0) / 32767.0
+    mean = int(samples.sum()) / n / 32767.0 if n else 0.0
+    rms = _rms(samples)
+    peak = _peak(samples)
     return {
         "n_channels": n_channels,
         "sample_rate": sample_rate,
@@ -107,12 +111,24 @@ def decode_wav(content: bytes) -> dict:
     }
 
 
+def _rms(samples: np.ndarray) -> float:
+    """Normalized RMS from the exact integer sum of squares."""
+    n = len(samples)
+    return math.sqrt(int((samples * samples).sum()) / n) / 32767.0 if n else 0.0
+
+
+def _peak(samples: np.ndarray) -> float:
+    """Normalized peak magnitude (0.0 for an empty span)."""
+    return int(np.abs(samples).max()) / 32767.0 if len(samples) else 0.0
+
+
 # --- PPM P6 (binary RGB, maxval <= 255) -----------------------------------
 
-def encode_ppm(width: int, height: int, rgb: list[tuple[int, int, int]]) -> bytes:
-    """Canonical P6 PPM: ASCII header, binary RGB payload."""
+def encode_ppm(width: int, height: int, rgb: np.ndarray) -> bytes:
+    """Canonical P6 PPM: ASCII header, binary RGB payload. `rgb` is
+    any (n_pixels, 3) array-like of channel values in 0..255."""
     header = f"P6\n{width} {height}\n255\n".encode()
-    return header + bytes(v for px in rgb for v in px)
+    return header + np.asarray(rgb, dtype=np.uint8).tobytes()
 
 
 def _parse_ppm_header(content: bytes) -> tuple[int, int, int, int]:
@@ -143,19 +159,23 @@ def _parse_ppm_header(content: bytes) -> tuple[int, int, int, int]:
     return width, height, maxval, pos
 
 
+def _ppm_pixels(content: bytes) -> tuple[int, int, int, int, np.ndarray]:
+    """Header parse plus the payload as an (n_pixels, 3) uint8 view:
+    (width, height, maxval, payload_pos, rgb). Raises on a payload
+    shorter than the header states."""
+    width, height, maxval, pos = _parse_ppm_header(content)
+    pix = content[pos : pos + 3 * width * height]
+    if len(pix) < 3 * width * height:
+        raise ValueError("truncated pixel payload")
+    return width, height, maxval, pos, np.frombuffer(pix, np.uint8).reshape(-1, 3)
+
+
 def decode_ppm(content: bytes) -> dict:
     """Parse P6 PPM: whitespace/comment-tolerant header scan, then
     pixel statistics from the real RGB payload."""
-    width, height, maxval, pos = _parse_ppm_header(content)
+    width, height, maxval, pos, rgb = _ppm_pixels(content)
     n_px = width * height
-    pix = content[pos : pos + 3 * n_px]
-    if len(pix) < 3 * n_px:
-        raise ValueError("truncated pixel payload")
-    tot = [0, 0, 0]
-    for i in range(0, 3 * n_px, 3):
-        tot[0] += pix[i]
-        tot[1] += pix[i + 1]
-        tot[2] += pix[i + 2]
+    tot = [int(t) for t in rgb.sum(axis=0, dtype=np.int64)]
     return {
         "width": width,
         "height": height,
@@ -176,17 +196,9 @@ def resize_ppm(content: bytes, out_w: int, out_h: int) -> bytes:
     resample the pixel grid (src = floor(dst * in/out), the standard
     NN mapping), re-encode.  Replaces the byte-stride stub for the
     one image format this container can honestly decode."""
-    d = decode_ppm(content)
-    w, h = d["width"], d["height"]
-    pix = content[d["_payload_pos"]:]
-    rgb = []
-    for y_out in range(out_h):
-        y_src = y_out * h // out_h
-        for x_out in range(out_w):
-            x_src = x_out * w // out_w
-            i = 3 * (y_src * w + x_src)
-            rgb.append((pix[i], pix[i + 1], pix[i + 2]))
-    return encode_ppm(out_w, out_h, rgb)
+    w, h, _maxval, _pos, rgb = _ppm_pixels(content)
+    y_out, x_out = np.divmod(np.arange(out_w * out_h), out_w)
+    return encode_ppm(out_w, out_h, rgb[(y_out * h // out_h) * w + x_out * w // out_w])
 
 
 # --- deterministic fixture synthesis (executor-side) ----------------------
@@ -200,26 +212,23 @@ def synth_wav_bytes(seed: int) -> bytes:
     sample_rate = 8000 + 1000 * ((seed // 2) % 4)
     n_frames = 200 + (seed // 2) % 50
     freq = 220.0 + (seed % 40) * 5.0
-    samples = []
-    for i in range(n_frames):
-        v = 0.5 * math.sin(2.0 * math.pi * freq * i / sample_rate)
-        samples.extend([v] * n_channels)
-    return encode_wav(samples, sample_rate, n_channels)
+    v = 0.5 * np.sin(2.0 * math.pi * freq * np.arange(n_frames) / sample_rate)
+    return encode_wav(np.repeat(v, n_channels), sample_rate, n_channels)
 
 
 def synth_ppm_bytes(seed: int) -> bytes:
     """Gradient PPM with dimensions derived from the seed."""
     width = 8 + seed % 9
     height = 6 + seed % 7
-    rgb = [
-        (
+    y, x = np.divmod(np.arange(width * height), width)
+    rgb = np.stack(
+        [
             (x * 7 + y * 3 + seed) % 256,
             (x * 5 + y * 11 + 2 * seed) % 256,
             (x * 13 + y + 3 * seed) % 256,
-        )
-        for y in range(height)
-        for x in range(width)
-    ]
+        ],
+        axis=1,
+    )
     return encode_ppm(width, height, rgb)
 
 
@@ -259,14 +268,15 @@ def synth_ppm_video_bytes(seed: int, n_frames: int | None = None) -> bytes:
     frames = []
     for f in range(k):
         w, h = 4 + seed % 3, 3 + (seed + f) % 3
-        rgb = [
-            (
+        i = np.arange(w * h)
+        rgb = np.stack(
+            [
                 (seed * 37 + f * 11 + i * 7) % 256,
                 (seed * 53 + f * 13 + i * 17) % 256,
                 (seed * 71 + f * 19 + i * 29) % 256,
-            )
-            for i in range(w * h)
-        ]
+            ],
+            axis=1,
+        )
         frames.append(encode_ppm(w, h, rgb))
     return encode_ppm_video(frames)
 
@@ -291,17 +301,12 @@ def wav_segment_rms(content: bytes, n_segments: int = 4) -> list[dict]:
         if seg == n_segments - 1:
             hi = n  # any trailing partial frame lands in the last span
         span = samples[lo:hi]
-        if span:
-            rms = math.sqrt(sum(s * s for s in span) / len(span)) / 32767.0
-            peak = max(abs(s) for s in span) / 32767.0
-        else:
-            rms = peak = 0.0
         out.append(
             {
                 "segment": seg,
                 "n_samples": len(span),
-                "rms": rms,
-                "peak": peak,
+                "rms": _rms(span),
+                "peak": _peak(span),
             }
         )
     return out

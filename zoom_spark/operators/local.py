@@ -35,13 +35,19 @@ def local_frame(
     exactly as declared."""
     if isinstance(data, pa.Table):
         return spark.createDataFrame(data)
+    return spark.createDataFrame(arrow_rows(data, schema))
+
+
+def arrow_rows(rows: Sequence[tuple], schema: str | StructType) -> pa.Table:
+    """Row tuples as a ``pa.Table`` typed by the Spark ``schema`` (a DDL
+    string or a ``StructType``): each column is built as the Arrow type
+    Spark maps that schema to. ``local_frame`` builds driver-side frames
+    with it, and ``mapInArrow`` stages their output batches."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    cols = list(zip(*data)) if len(data) else [()] * len(arrow)
-    return spark.createDataFrame(
-        pa.table(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-            schema=arrow,
-        )
+    cols = list(zip(*rows)) if len(rows) else [()] * len(arrow)
+    return pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
     )

@@ -413,6 +413,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_centroid_stats,
+        int_dot,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -434,11 +435,6 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, k=k, iters=HNA_ITERS,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", HNA_QSCALE),
     )
-    dotl = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     labels = emb.select(F.col("vec_id").alias("id"), "label")
     nv = (
         int_assign(base, cents)
@@ -448,7 +444,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell",
             "vec",
             "label",
-            F.sqrt(dotl(F.col("vec"), F.col("vec")).cast("double")).alias(
+            F.sqrt(int_dot(F.col("vec"), F.col("vec")).cast("double")).alias(
                 "nrm"
             ),
         )
@@ -462,7 +458,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.zip_with(
                     F.col("cmat"),
                     F.col("cn2"),
-                    lambda c, n2: -2 * dotl(F.col("vec"), c) + n2,
+                    lambda c, n2: -2 * int_dot(F.col("vec"), c) + n2,
                 ),
                 F.col("cid"),
                 lambda sc, cid: F.struct(sc.alias("s"), cid.alias("cell")),
@@ -483,7 +479,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sim = (
         F.floor(
-            dotl(F.col("q_vec"), F.col("vec")).cast("double")
+            int_dot(F.col("q_vec"), F.col("vec")).cast("double")
             / (F.col("q_nrm") * F.col("nrm"))
             * 1e6
             + F.lit(0.5)

@@ -203,6 +203,7 @@ def semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator (dedup/semdedup.semdedup) stays property-tested."""
     from zoom_spark.similarity.kmeans import (
         int_assign,
+        int_dot,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -216,16 +217,11 @@ def semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, k=SEMDEDUP_K, iters=SEMDEDUP_ITERS,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", SEMDEDUP_QSCALE),
     )
-    dotl = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     cells = int_assign(base, cents).select(
         F.col("id"),
         "cell",
         "vec",
-        F.sqrt(dotl(F.col("vec"), F.col("vec")).cast("double")).alias("nrm"),
+        F.sqrt(int_dot(F.col("vec"), F.col("vec")).cast("double")).alias("nrm"),
     )
     a = cells.select(
         F.col("id").alias("id_a"),
@@ -243,7 +239,7 @@ def semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, "cell")
         .where(F.col("id_a") < F.col("id_b"))
         .where(
-            dotl(F.col("vec_a"), F.col("vec_b")).cast("double")
+            int_dot(F.col("vec_a"), F.col("vec_b")).cast("double")
             >= F.lit(SEMDEDUP_THRESHOLD) * F.col("nrm_a") * F.col("nrm_b")
         )
         .select(F.col("id_b").alias("id"))

@@ -78,8 +78,8 @@ def multimodal_decode_wav_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 HONEST decode gate (r1 judge finding: decode was a stub):
     executor-side synthesis of real RIFF/WAVE and P6 PPM container
     bytes (even doc_ids -> sine-burst WAV, odd -> gradient PPM), then
-    a second mapInPandas stage that PARSES those bytes with the
-    pure-Python codecs (chunk walk, header fields, PCM/pixel payload
+    a second mapInArrow stage that PARSES those bytes with the codecs
+    (Python chunk walk and header fields, numpy PCM/pixel payload
     math — codecs.py).  The oracle recomputes every output field in
     closed form from doc_id — byte lengths, header ints, and the
     exact integer pixel sum — so a parser that misreads any header
@@ -88,11 +88,7 @@ def multimodal_decode_wav_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered by the pytest roundtrip suite instead."""
     from zoom_spark.multimodal.binary_ops import decode_media, synthesize_media_fixture
 
-    from zoom_spark.io import spread_scan
-
-    # WAV synth + full decode are heavy per row and otherwise run in
-    # the single-split scan's one task (no-op on a parallel scan)
-    docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = synthesize_media_fixture(docs, id_col="doc_id")
     dec = decode_media(media)
     return dec.select(

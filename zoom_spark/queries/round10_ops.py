@@ -1534,6 +1534,7 @@ def dunn_index_int_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_centroid_stats,
+        int_dot,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -1553,19 +1554,14 @@ def dunn_index_int_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, (_, c1) in enumerate(cents)
         for (_, c2) in cents[i + 1 :]
     )
-    dotl = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     cstats = int_centroid_stats(spark, cents)
     assigned = int_assign(base, cents)
     idx = F.array_position(
         F.col("cid"), F.col("cell")
     ).cast("int")
     dist2 = (
-        dotl(F.col("vec"), F.col("vec"))
-        - 2 * dotl(F.col("vec"), F.element_at(F.col("cmat"), idx))
+        int_dot(F.col("vec"), F.col("vec"))
+        - 2 * int_dot(F.col("vec"), F.element_at(F.col("cmat"), idx))
         + F.element_at(F.col("cn2"), idx)
     )
     intra = assigned.crossJoin(cstats).agg(

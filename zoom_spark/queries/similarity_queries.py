@@ -225,18 +225,13 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     / IEEE sqrt norms, shared floor(x*1e6+0.5) snap BEFORE ranking).
     The approximate result value-hashes even though recall < 1 —
     same round-9 technique as knn_ivf."""
-    from zoom_spark.similarity.kmeans import int_quantize
+    from zoom_spark.similarity.kmeans import int_dot, int_quantize
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = int_quantize(
         emb, "embedding", "vec_id", LSH_QSCALE
     ).localCheckpoint(eager=False)
     planes = _int_planes()
-    dotl = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     pstats = F.broadcast(
         local_frame(
             spark,
@@ -248,7 +243,7 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pmat"),
             F.sequence(F.lit(0), F.lit(LSH_PLANES - 1)),
             lambda p, i: F.when(
-                dotl(F.col("vec"), p) > 0,
+                int_dot(F.col("vec"), p) > 0,
                 F.pow(F.lit(2.0), i.cast("double")).cast("long"),
             ).otherwise(F.lit(0).cast("long")),
         ),
@@ -261,7 +256,7 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id",
             "vec",
             bucket.alias("b"),
-            F.sqrt(dotl(F.col("vec"), F.col("vec")).cast("double")).alias(
+            F.sqrt(int_dot(F.col("vec"), F.col("vec")).cast("double")).alias(
                 "nrm"
             ),
         )
@@ -289,7 +284,7 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sim = (
         F.floor(
-            dotl(F.col("q_vec"), F.col("vec")).cast("double")
+            int_dot(F.col("q_vec"), F.col("vec")).cast("double")
             / (F.col("q_nrm") * F.col("nrm"))
             * 1e6
             + F.lit(0.5)
@@ -394,6 +389,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_centroid_stats,
+        int_dot,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -407,16 +403,11 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, k=IVF_K, iters=IVF_ITERS,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", IVF_QSCALE),
     )
-    dotl = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     nv = int_assign(base, cents).select(
         "id",
         "cell",
         "vec",
-        F.sqrt(dotl(F.col("vec"), F.col("vec")).cast("double")).alias("nrm"),
+        F.sqrt(int_dot(F.col("vec"), F.col("vec")).cast("double")).alias("nrm"),
     )
     # per-query probe list: exact integer L2 score against every
     # centroid (the same one-row broadcast-matrix fold as int_assign,
@@ -429,7 +420,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.zip_with(
                     F.col("cmat"),
                     F.col("cn2"),
-                    lambda c, n2: -2 * dotl(F.col("vec"), c) + n2,
+                    lambda c, n2: -2 * int_dot(F.col("vec"), c) + n2,
                 ),
                 F.col("cid"),
                 lambda s, cid: F.struct(s.alias("s"), cid.alias("cell")),
@@ -451,7 +442,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sim = (
         F.floor(
-            dotl(F.col("q_vec"), F.col("vec")).cast("double")
+            int_dot(F.col("q_vec"), F.col("vec")).cast("double")
             / (F.col("q_nrm") * F.col("nrm"))
             * 1e6
             + F.lit(0.5)
@@ -712,6 +703,8 @@ def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = Non
     window over chained lazy checkpoints) spent ~8 s/query at sf0.1 in
     shuffle + window stages; this is <2 s with bitwise-identical
     output (long sums are order-exact, argmin ties to lowest cell)."""
+    from zoom_spark.similarity.kmeans import int_dot
+
     spark = sdim.sparkSession
     # pivot the long frame into per-(vec_id, sub) subvector arrays
     svec = (
@@ -741,16 +734,11 @@ def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = Non
                 "cn2 array<array<long>>, cid3 array<array<int>>",
             )
         )
-        dotl = lambda u, v: F.aggregate(  # noqa: E731
-            F.zip_with(u, v, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
         sc_ = F.element_at(F.col("cmat3"), F.col("sub") + 1)
         sn2 = F.element_at(F.col("cn2"), F.col("sub") + 1)
         scid = F.element_at(F.col("cid3"), F.col("sub") + 1)
         score = F.zip_with(
-            sc_, sn2, lambda c, n2: -2 * dotl(F.col("v8"), c) + n2
+            sc_, sn2, lambda c, n2: -2 * int_dot(F.col("v8"), c) + n2
         )
         idx = F.array_position(score, F.array_min(score)).cast("int")
         return svec.crossJoin(cstats).select(
@@ -1042,6 +1030,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_centroid_stats,
+        int_dot,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
@@ -1090,11 +1079,6 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-query probe list: exact integer L2 vs the coarse centroids
     cstats = int_centroid_stats(spark, cents)
-    dotl = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     q = base.where(F.col("id") < IVFPQ_NQ).crossJoin(cstats).select(
         F.col("id").alias("q_id"),
         F.explode(
@@ -1102,7 +1086,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.zip_with(
                     F.col("cmat"),
                     F.col("cn2"),
-                    lambda c, n2: -2 * dotl(F.col("vec"), c) + n2,
+                    lambda c, n2: -2 * int_dot(F.col("vec"), c) + n2,
                 ),
                 F.col("cid"),
                 lambda sc, cid: F.struct(sc.alias("s"), cid.alias("cell")),

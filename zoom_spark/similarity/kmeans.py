@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zoom_spark.functions.vectors import dot
@@ -199,6 +199,16 @@ def int_centroid_stats(
     )
 
 
+def int_dot(u: Column, v: Column) -> Column:
+    """Exact long dot product of two integer array columns: the fold
+    every integer score over fitted cells or planes is built from."""
+    return F.aggregate(
+        F.zip_with(u, v, lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
 def int_assign(base: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
     """(id, vec, cell) nearest-centroid assignment over integer
     vectors: score_j = -2*v.c_j + ||c_j||^2 in exact long arithmetic;
@@ -207,13 +217,7 @@ def int_assign(base: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame
     score = F.zip_with(
         F.col("cmat"),
         F.col("cn2"),
-        lambda c, n2: -2
-        * F.aggregate(
-            F.zip_with(F.col("vec"), c, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        + n2,
+        lambda c, n2: -2 * int_dot(F.col("vec"), c) + n2,
     )
     idx = F.array_position(score, F.array_min(score)).cast("int")
     return base.crossJoin(cstats).select(
