@@ -7,8 +7,10 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from zoom_spark.session import get_spark  # noqa: E402
@@ -110,7 +112,7 @@ def main():
         # keep the operator tree; trim the verbose per-node detail section
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", f"*{why}*", "", "```", tree, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -6,8 +6,12 @@ from __future__ import annotations
 
 import collections
 import datetime
+import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -65,19 +69,29 @@ def test_all_stages_end_to_end(spark, tmp_path):
 
 
 def test_caught_up_night_changes_no_sink(spark, tmp_path):
-    """No sf0.001 order falls on the day after the first order day, so
-    the second night finds nothing to load: every incremental count is
-    0 and every sink holds the same rows and schema as after the
-    bootstrap (an empty append adds a schema-only file, an empty
-    dynamic-partition overwrite touches no partition)."""
-    sink = str(tmp_path / "wh")
-    argv = ["--all", "--source-dir", SF_DIR, "--sink-dir", sink]
-    orders = load_table(spark, SF_DIR, "orders").select(
-        F.to_date("o_orderdate").alias("d")
+    """A second night over a source with no new order day finds
+    nothing to load: every incremental count is 0 and every sink holds
+    the same rows and schema as after the bootstrap (an empty append
+    adds a schema-only file, an empty dynamic-partition overwrite
+    touches no partition). The source is the sf0.001 fixture with
+    `orders` cut to its first order day."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in os.listdir(SF_DIR):
+        if name != "orders.parquet":
+            os.symlink(os.path.join(SF_DIR, name), src / name)
+    orders = pq.read_table(os.path.join(SF_DIR, "orders.parquet"))
+    first_day = pc.min(orders["o_orderdate"]).as_py().date()
+    day_end = datetime.datetime.combine(
+        first_day + datetime.timedelta(days=1), datetime.time()
     )
-    first_day = orders.agg(F.min("d")).first()[0]
-    next_day = first_day + datetime.timedelta(days=1)
-    assert orders.where(F.col("d") == next_day).count() == 0
+    ts = orders.schema.field("o_orderdate").type
+    pq.write_table(
+        orders.filter(pc.less(orders["o_orderdate"], pa.scalar(day_end, ts))),
+        src / "orders.parquet",
+    )
+    sink = str(tmp_path / "wh")
+    argv = ["--all", "--source-dir", str(src), "--sink-dir", sink]
 
     def snapshot():
         out = {}
@@ -87,6 +101,7 @@ def test_caught_up_night_changes_no_sink(spark, tmp_path):
         return out
 
     first = main(argv, spark=spark)
+    assert first["meetings"] > 0
     before = snapshot()
     again = main(argv, spark=spark)
     assert again == dict(first, meetings=0, participants=0, meeting_settings=0)
@@ -94,19 +109,33 @@ def test_caught_up_night_changes_no_sink(spark, tmp_path):
 
 
 def test_meetings_watermark_advances_one_day_per_run(spark, tmp_path):
+    """Each run loads the first source day with orders after the sink's
+    last day. sf0.001 has no order on the day after its first order
+    day, so night 2 must skip that gap day, not retry it forever."""
     sink = str(tmp_path / "wh2")
     conn = Connector(spark, SF_DIR, sink)
     conn.load_meetings()
     d1 = spark.read.parquet(f"{sink}/meetings").agg(
         F.max("order_date").alias("d")
     ).first().d
+    src_days = {
+        r.d
+        for r in load_table(spark, SF_DIR, "orders")
+        .select(F.to_date("o_orderdate").alias("d"))
+        .distinct()
+        .collect()
+    }
+    want = min(d for d in src_days if d > d1)
+    assert want - d1 > datetime.timedelta(days=1)  # a gap day lies between
     conn.load_meetings()
-    days = spark.read.parquet(f"{sink}/meetings").select(
-        "order_date"
-    ).distinct().collect()
-    assert len(days) <= 2  # second run loads at most the next day
-    d2 = max(r.order_date for r in days)
-    assert d2 >= d1
+    days = sorted(
+        r.order_date
+        for r in spark.read.parquet(f"{sink}/meetings")
+        .select("order_date")
+        .distinct()
+        .collect()
+    )
+    assert days == [d1, want]
     # idempotent retry: re-running the same day must not duplicate
     n_before = spark.read.parquet(f"{sink}/meetings").count()
     # simulate retry by reloading the latest day (dynamic overwrite)

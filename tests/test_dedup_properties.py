@@ -47,11 +47,11 @@ def test_simhash_clones_at_distance_zero(spark, n_docs):
 
 
 def test_winnow_identical_texts_share_fingerprints(spark):
-    from zoom_spark.functions.text import rolling_hash_fingerprint
+    from zoom_spark.functions.text import md5_window_fingerprint
 
     doubled = _doubled_docs(spark, SF_DIR)
     fp = doubled.select(
-        "doc_id", rolling_hash_fingerprint("text").alias("fp")
+        "doc_id", md5_window_fingerprint("text").alias("fp")
     )
     a = fp.where(F.col("doc_id") < DUP_OFFSET).alias("a")
     b = fp.where(F.col("doc_id") >= DUP_OFFSET).select(
@@ -452,10 +452,7 @@ def test_window_fingerprints_empty_on_short_text(spark):
     used to hash truncated windows (and md5('') low-60 mod 16 == 0,
     so every empty doc emitted a spurious fingerprint) while the
     DuckDB oracle's range(1, 1) is empty."""
-    from zoom_spark.functions.text import (
-        md5_window_fingerprint,
-        rolling_hash_fingerprint,
-    )
+    from zoom_spark.functions.text import md5_window_fingerprint
 
     df = spark.createDataFrame(
         [("", ), ("ab",), ("1234567",), ("12345678",), ("123456789",)],
@@ -463,12 +460,10 @@ def test_window_fingerprints_empty_on_short_text(spark):
     ).select(
         "text",
         md5_window_fingerprint("text", window=8, keep_mod=1).alias("md5fp"),
-        rolling_hash_fingerprint("text", window=8, keep_mod=1).alias("rollfp"),
     )
     rows = {r["text"]: r for r in df.collect()}
     for short in ("", "ab", "1234567"):
         assert rows[short]["md5fp"] == [], short
-        assert rows[short]["rollfp"] == [], short
     # exactly at the window length: one window
     assert len(rows["12345678"]["md5fp"]) == 1
     assert len(rows["123456789"]["md5fp"]) == 2

@@ -264,14 +264,17 @@ def test_sql_ddl_lifecycle_matches_reference_drop_then_load(spark):
     drop_table + recreate-on-load cycle (/root/reference/main.py:38-46)
     as CREATE TABLE AS / INSERT INTO / DROP TABLE IF EXISTS over the
     session catalog, with existence probes between steps."""
+    import os
     import shutil
+    from urllib.parse import urlparse
 
     from zoom_spark.io import load_table
 
     spark.sql("DROP TABLE IF EXISTS zoom_users_ddl")
     # a dropped table's directory can survive a previous session's
     # in-memory catalog; CREATE refuses to reuse the location
-    shutil.rmtree("/root/repo/spark-warehouse/zoom_users_ddl", ignore_errors=True)
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    shutil.rmtree(os.path.join(warehouse, "zoom_users_ddl"), ignore_errors=True)
     assert not spark.catalog.tableExists("zoom_users_ddl")
 
     load_table(spark, SF_DIR, "customer").createOrReplaceTempView("cust_src")

@@ -120,13 +120,13 @@ def test_jaccard_matches_set_definition(spark, pairs):
 @given(texts)
 @settings(**SETTINGS)
 def test_simhash_identical_texts_distance_zero(spark, rows):
-    from zoom_spark.dedup.simhash import hamming, simhash
+    from zoom_spark.dedup.simhash import hamming, simhash_md5
 
     df = spark.createDataFrame([(i, s) for i, s in enumerate(rows)], ["i", "t"])
     sigs = df.select(
         "i",
-        simhash(F.col("t")).alias("s1"),
-        simhash(F.col("t")).alias("s2"),
+        simhash_md5(F.col("t")).alias("s1"),
+        simhash_md5(F.col("t")).alias("s2"),
     )
     bad = sigs.where(hamming(F.col("s1"), F.col("s2")) != 0).count()
     assert bad == 0

@@ -137,17 +137,19 @@ class Connector:
     @elapsed
     def load_meetings(self) -> int:
         """One day per run past the sink watermark
-        (main.py:204-240): bootstrap loads the earliest day."""
+        (main.py:204-240): the earliest source day at or after it, so a
+        day with no orders is skipped, not retried forever; bootstrap
+        (no watermark) loads the earliest day."""
         src = self._src("orders").withColumn(
             "order_date", F.to_date("o_orderdate")
         )
         existing = self._sink("meetings")
-        if existing is None:
-            day = src.agg(F.min("order_date").alias("d"))
-        else:
-            day = next_watermark(existing, "order_date").select(
-                F.col("next_load_date").alias("d")
-            )
+        pending = src
+        if existing is not None:
+            pending = src.join(
+                F.broadcast(next_watermark(existing, "order_date"))
+            ).where(F.col("order_date") >= F.col("next_load_date"))
+        day = pending.agg(F.min("order_date").alias("d"))
         delta = src.join(F.broadcast(day)).where(F.col("order_date") == F.col("d")).drop("d")
         # a caught-up night (P8 guard) writes no partition and loads 0
         n = zio.write_idempotent_partition(

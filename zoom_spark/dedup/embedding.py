@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zoom_spark.dedup.ngram import bucket_pairs
 from zoom_spark.functions.vectors import cosine_with_norms, norm
 from zoom_spark.operators.local import local_frame
 from zoom_spark.similarity.knn import make_hyperplanes
@@ -132,15 +133,7 @@ def lsh_candidate_pairs(
     # never match).  The frame is (id, band, bucket) longs — ~3 words
     # per doc per band, cheap to hold even at corpus scale, and the
     # projection pass it saves is the expensive part.
-    bk = bk.localCheckpoint()
-    a = bk.select("band_id", "bucket", F.col("id").alias("id_a"))
-    b = bk.select("band_id", "bucket", F.col("id").alias("id_b"))
-    return (
-        a.join(b, on=["band_id", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return bucket_pairs(bk.localCheckpoint(), ["band_id", "bucket"])
 
 
 def cosine_neardup_pairs(

@@ -1,11 +1,16 @@
 """MinHash + LSH banding near-dedup (X2) — the 100 TB scale path.
 
-shingle -> K minhashes (xxhash64 with per-permutation salt) ->
-B bands of R rows -> band-bucket join for candidates -> exact
-Jaccard verification of candidates only.
+shingle -> K minhashes -> B bands of R rows -> band-bucket join for
+candidates -> exact Jaccard verification of candidates only.
+
+Every hash is the low 60 bits of md5 (token, shingle and band
+hashes), and the K signature hashes come from the Kirsch-Mitzenmacher
+two-hash family h_i = h1 + i*(h2 mod P): exact BIGINT arithmetic, so
+the DuckDB oracle replays signatures, buckets and the verified pair
+set value for value.
 
 Everything through candidate generation is column expressions
-(transform/array_min/posexplode); cost is O(N·K) map-side plus one
+(transform/aggregate/posexplode); cost is O(N·K) map-side plus one
 shuffle on (band_id, band_hash). The quadratic work only happens
 inside buckets, which is the entire point of LSH banding (see
 PAPERS.md; standard MMDS ch.3 construction — public knowledge).
@@ -19,197 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zoom_spark.dedup.ngram import jaccard
+from zoom_spark.dedup.ngram import bucket_pairs, jaccard
 from zoom_spark.functions.text import ws_tokens
 from zoom_spark.io import spread_scan
 
-
-_LONG_MAX = (1 << 63) - 1
-
-
-def hashed_shingles(text_col, shingle_n: int = 3):
-    """Distinct shingles reduced to 64-bit values. Everything
-    downstream (signature fold, Jaccard verification) operates on
-    longs: salted re-hashes touch 8 bytes instead of the shingle
-    string, and the verification shuffle moves long arrays instead of
-    text. Collision probability ~2^-64 per pair — the standard
-    hashed-shingle formulation (MMDS ch.3).
-
-    Construction never materializes shingle STRINGS: tokens hash
-    first, then the sliding window combines the n token hashes with
-    chained xxhash64(a, b) over shifted arrays — measured 3× faster
-    than concat-then-hash at sf0.1 (no per-shingle string allocation).
-    The token array binds to a lambda variable (see
-    weighted_minhash.term_freqs for why: naming an outer expression
-    inside a lambda re-inlines its whole subtree per reference)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.transform(ws_tokens(F.lower(c)), lambda t: F.xxhash64(t))
-
-    def bind(expr, body):
-        return F.element_at(F.transform(F.array(expr), body), 1)
-
-    def with_hashes(h):
-        n_tok = F.size(h)
-        g = h
-        for k in range(1, shingle_n):
-            shifted = F.slice(h, k + 1, F.greatest(n_tok - k, F.lit(0)))
-            g = F.zip_with(g, shifted, lambda a, b: F.xxhash64(a, b))
-        # positions past n_tok-n+1 hold partial grams — drop them
-        full = F.slice(g, 1, F.greatest(n_tok - (shingle_n - 1), F.lit(0)))
-        return F.array_distinct(full)
-
-    return bind(toks, with_hashes)
-
-
-def minhash_signature(shingle_hash_arr, num_hashes: int = 32):
-    """Array of `num_hashes` minhash values computed in a SINGLE pass
-    over the hashed-shingle array: fold each shingle's K salted
-    xxhash64 values into a running elementwise minimum (zip_with +
-    least).
-
-    The single-pass shape matters for plan size, not just row cost:
-    the naive ``array(*[array_min(transform(sh, hash_i)) ...])`` form
-    repeats the whole shingle-construction subtree K times, and once
-    CollapseProject inlines it further the optimizer+codegen spend
-    minutes on the expression tree (measured 152 s to plan+run 1000
-    rows at K=32). Here the shingle subtree appears exactly once.
-    """
-    def hashes(s):
-        return F.array(*[F.xxhash64(s, F.lit(i)) for i in range(num_hashes)])
-
-    zero = F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_hashes)
-    return F.aggregate(
-        shingle_hash_arr,
-        zero,
-        lambda acc, s: F.zip_with(acc, hashes(s), lambda a, b: F.least(a, b)),
-    )
-
-
-def signature_df(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
-    """(id, sig: array<long>) with the signature MATERIALIZED behind a
-    round-robin exchange. The exchange is deliberate: it stops
-    CollapseProject from inlining the signature expression into every
-    downstream consumer (8 band hashes -> 8 copies of the tree). The
-    shuffled payload is only (id, K longs) per document — negligible
-    next to the band-bucket shuffle that follows at any scale.
-
-    r13: the input is spread BEFORE the signature projection — the
-    fixture scans are single-split, so the shingle+fold work otherwise
-    runs in one task (spread_scan is a no-op on a parallel scan)."""
-    src = spread_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    )
-    return src.select(
-        "id",
-        minhash_signature(
-            hashed_shingles(F.col("__text"), shingle_n), num_hashes
-        ).alias("sig"),
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def band_buckets(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """(id, band_id, band_hash) — one row per document per band."""
-    rows = num_hashes // bands
-    sig = signature_df(
-        df, text_col, id_col, shingle_n=shingle_n, num_hashes=num_hashes
-    )
-    bands_arr = F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at("sig", b * rows + r + 1).cast("string")
-                        for r in range(rows)
-                    ],
-                ),
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select("id", F.posexplode(bands_arr).alias("band_id", "band_hash"))
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing >= 1 band bucket."""
-    bk = band_buckets(
-        df, text_col, id_col,
-        shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-    )
-    a = bk.select("band_id", "band_hash", F.col("id").alias("id_a"))
-    b = bk.select("band_id", "band_hash", F.col("id").alias("id_b"))
-    return (
-        a.join(b, on=["band_id", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """LSH candidates verified by exact shingle Jaccard >= threshold."""
-    cands = minhash_candidate_pairs(
-        df, text_col, id_col,
-        shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-    )
-    # Same exchange-barrier trick as signature_df: both verification
-    # join sides (sh_a / sh_b) rename columns AFTER the repartition,
-    # so the underlying shuffle subtrees are identical and Spark's
-    # ReuseExchange computes the shingle projection once, not twice.
-    # Hashed shingles: the exchange moves long arrays, not text.
-    # r13: input spread before the shingle projection (single-split
-    # fixture scans would otherwise serialize it on one task).
-    sh = spread_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    ).select(
-        "id",
-        hashed_shingles(F.col("__text"), shingle_n).alias("sh"),
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-    pairs = (
-        cands.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), on="id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), on="id_b")
-    )
-    sim = F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6)
-    return (
-        pairs.select("id_a", "id_b", sim.alias("jaccard_sim"))
-        .where(F.col("jaccard_sim") >= threshold)
-    )
-
-
-# --- md5-based oracle-replayable variant (round 9) -------------------------
 
 _KM_PRIME = 140_737_488_355_213  # < 2^47: i*h2 + h1 stays < 2^61 exact
 _MD5_IDENTITY = 1 << 62          # fold identity, above any KM hash value
@@ -222,9 +40,17 @@ def _md5lo60(scol):
 
 
 def hashed_shingles_md5(text_col, shingle_n: int = 3):
-    """:func:`hashed_shingles` on md5 instead of xxhash64: token
+    """Distinct word shingles reduced to 60-bit md5 values: token
     hashes chain through md5 of their decimal concatenation, so an
-    ANSI-SQL oracle replays the exact shingle set."""
+    ANSI-SQL oracle replays the exact shingle set. Everything
+    downstream (signature fold, Jaccard verification) operates on
+    longs, and the verification shuffle moves long arrays, not text.
+
+    Construction never materializes shingle STRINGS: tokens hash
+    first, then the sliding window combines the n token hashes over
+    shifted arrays. The token array binds to a lambda variable (see
+    weighted_minhash.term_freqs for why: naming an outer expression
+    inside a lambda re-inlines its whole subtree per reference)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     toks = F.transform(ws_tokens(F.lower(c)), lambda t: _md5lo60(t))
 
@@ -254,7 +80,15 @@ def minhash_md5_signature(shingle_hash_arr, num_hashes: int = 32):
     Kirsch-Mitzenmacher two-hash family h_i = h1 + i*(h2 mod P):
     TWO md5 evaluations per shingle (bound once via the
     single-element-transform trick) instead of num_hashes, and pure
-    exact integer arithmetic both engines can replay."""
+    exact integer arithmetic both engines can replay.
+
+    The single-pass shape (zip_with + least into a running minimum)
+    matters for plan size, not just row cost: the naive
+    ``array(*[array_min(transform(sh, hash_i)) ...])`` form repeats
+    the whole shingle subtree K times, and once CollapseProject
+    inlines it further the optimizer+codegen spend minutes on the
+    expression tree (measured 152 s to plan+run 1000 rows at K=32).
+    Here the shingle subtree appears exactly once."""
 
     def hashes(s):
         pair = F.struct(
@@ -295,10 +129,10 @@ def minhash_md5_dedup_pairs(
     bands: int = 8,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Oracle-replayable twin of :func:`minhash_dedup_pairs`: md5
-    shingles/signatures/band hashes, exact Jaccard verify, and the
-    shared floor(x*1e6+0.5) similarity snap.  Same band/bucket
-    equi-join scale shape."""
+    """LSH candidates verified by exact shingle Jaccard >= threshold:
+    md5 shingles/signatures/band hashes, candidates from the band
+    bucket self-join (:func:`ngram.bucket_pairs`), and the shared
+    floor(x*1e6+0.5) similarity snap."""
     rows = num_hashes // bands
     # ONE shingle frame feeds BOTH the signature and the verification
     # join (round-10 perf fix: the sig side used to recompute the md5
@@ -341,14 +175,7 @@ def minhash_md5_dedup_pairs(
     bk = sig.select(
         "id", F.posexplode(bands_arr).alias("band_id", "band_hash")
     )
-    a = bk.select("band_id", "band_hash", F.col("id").alias("id_a"))
-    b = bk.select("band_id", "band_hash", F.col("id").alias("id_b"))
-    cands = (
-        a.join(b, on=["band_id", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cands = bucket_pairs(bk, ["band_id", "band_hash"])
     pairs = (
         cands.join(
             sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), on="id_a"

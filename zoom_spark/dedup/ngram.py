@@ -47,6 +47,22 @@ def jaccard(a, b):
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+def bucket_pairs(postings: DataFrame, keys: list[str]) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) of the `id`s that share
+    a bucket: a self equi-join of the (id, *keys) posting rows on
+    `keys`. The candidate half of candidate-join-then-verify, shared
+    by the MinHash, weighted-MinHash, hyperplane-LSH and prefix-filter
+    joins; the quadratic work stays inside buckets."""
+    a = postings.select(*keys, F.col("id").alias("id_a"))
+    b = postings.select(*keys, F.col("id").alias("id_b"))
+    return (
+        a.join(b, on=keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -119,13 +135,7 @@ def ngram_jaccard_pairs(
     postings = ordered.select(
         "id", "blk", F.explode(F.slice("sh", 1, prefix_len)).alias("g")
     )
-    cands = (
-        postings.select("blk", "g", F.col("id").alias("id_a"))
-        .join(postings.select("blk", "g", F.col("id").alias("id_b")), on=["blk", "g"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cands = bucket_pairs(postings, ["blk", "g"])
     sides = ordered.select("id", "sh").repartition(
         df.sparkSession.sparkContext.defaultParallelism, "id"
     )

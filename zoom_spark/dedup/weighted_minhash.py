@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zoom_spark.dedup.ngram import bucket_pairs
 from zoom_spark.functions.text import ws_tokens
 from zoom_spark.io import spread_scan
 
@@ -104,7 +105,7 @@ def weighted_minhash_signature(tf_arr, num_hashes: int = 32):
     """array<long> of `num_hashes` sampled term hashes, single-pass:
     fold the term-frequency array into an elementwise running argmin
     of struct(score, term). The K salted scores per term are unrolled
-    statically (like minhash.minhash_signature) so the tf subtree
+    statically (like minhash.minhash_md5_signature) so the tf subtree
     appears exactly once in the plan."""
 
     def scored(e):
@@ -139,10 +140,10 @@ def weighted_signature_df(
     df: DataFrame, text_col: str, id_col: str, *, num_hashes: int = 32
 ) -> DataFrame:
     """(id, sig: array<long>) materialized behind an exchange barrier
-    (see minhash.signature_df for why: CollapseProject would otherwise
-    re-inline the K-wide fold into every band consumer). r13: input
-    spread before the fold (single-split fixture scans would
-    otherwise serialize it on one task)."""
+    (see minhash.minhash_md5_dedup_pairs for why: CollapseProject
+    would otherwise re-inline the K-wide fold into every band
+    consumer). r13: input spread before the fold (single-split
+    fixture scans would otherwise serialize it on one task)."""
     return spread_scan(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     ).select(
@@ -244,18 +245,10 @@ def weighted_minhash_dedup_pairs(
         weighted_minhash_signature(F.col("tfa"), num_hashes).alias("sig"),
     ).repartition(n_par)
     bk = _band_rows(sig, num_hashes, bands)
-    cands = (
-        bk.withColumnRenamed("id", "id_a")
-        .join(
-            bk.withColumnsRenamed({"id": "id_b"}),
-            on=["band_id", "band_hash"],
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        # two consumers inside exact_weighted_jaccard (inter + left
-        # join) — materialize instead of re-running the band join
-        .localCheckpoint(eager=False)
+    # two consumers inside exact_weighted_jaccard (inter + left join)
+    # — materialize instead of re-running the band join
+    cands = bucket_pairs(bk, ["band_id", "band_hash"]).localCheckpoint(
+        eager=False
     )
     tf = (
         tfarr.select("id", F.explode("tfa").alias("e"))

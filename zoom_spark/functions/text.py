@@ -102,24 +102,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def rolling_hash_fingerprint(text: Column | str, window: int = 8, keep_mod: int = 16) -> Column:
-    """Winnowing-style fingerprint: polynomial rolling hash over
-    character windows, keeping hashes ≡ 0 (mod keep_mod), summarized
-    as a sorted distinct array. Pure higher-order-function expression
-    (sequence + transform + filter) — no UDF."""
-    c = F.col(text) if isinstance(text, str) else text
-    n = F.length(c)
-    # Guard: sequence(1, 0) evaluates DESCENDING to [1, 0] in Spark,
-    # which would hash spurious truncated windows for text shorter than
-    # `window` (DuckDB's range(1, 1) is empty) — emit no windows instead.
-    idx = F.when(n >= window, F.sequence(F.lit(1), n - window + 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    hashes = F.transform(idx, lambda i: F.xxhash64(c.substr(i, F.lit(window))))
-    kept = F.filter(hashes, lambda h: h % keep_mod == 0)
-    return F.array_sort(F.array_distinct(kept))
-
-
 def dup_token_ratio(text: Column | str) -> Column:
     """Fraction of tokens that are repeats of an earlier token:
     1 - distinct/total. The cheap repetition signal used by C4/Gopher-
@@ -153,15 +135,15 @@ def md5_window_fingerprint(
     """Winnowing-style fingerprint on an ENGINE-PORTABLE hash: the
     low 60 bits (15 hex chars) of md5 over each character window,
     keeping hashes ≡ 0 (mod keep_mod), summarized as a sorted
-    distinct array.  Same shape as rolling_hash_fingerprint but
-    md5-based, so a SQL oracle can replay it exactly (xxhash64 is
-    Spark-specific); pure higher-order-function expression, no
-    UDF."""
+    distinct array.  md5-based, so a SQL oracle can replay it
+    exactly; pure higher-order-function expression (sequence +
+    transform + filter), no UDF."""
     c = F.col(text) if isinstance(text, str) else text
     n = F.length(c)
-    # Same short-text guard as rolling_hash_fingerprint: sequence(1, 0)
-    # is [1, 0] (descending), not empty — and md5('') low-60 mod 16 == 0,
-    # so every empty/short doc would emit a spurious fingerprint.
+    # Guard: sequence(1, 0) evaluates DESCENDING to [1, 0] in Spark,
+    # not empty (DuckDB's range(1, 1) is) — it would hash spurious
+    # truncated windows, and md5('') low-60 mod 16 == 0, so every
+    # empty/short doc would emit a spurious fingerprint.
     idx = F.when(n >= window, F.sequence(F.lit(1), n - window + 1)).otherwise(
         F.array().cast("array<int>")
     )

@@ -1,9 +1,10 @@
 """Dedup gated queries (X1/X2) over `documents` and `embeddings`.
 
-Exact dedup and n-gram Jaccard are oracle-checked; minhash/simhash
-use Spark-specific hashes (xxhash64) so they are rows-only here and
-property-tested in tests/test_dedup.py (exact-duplicate pairs MUST be
-found at any threshold — SURVEY.md §5.2.5).
+Every query here is oracle-checked except weighted MinHash, which
+samples with Spark's xxhash64 and so is rows-only. MinHash and SimHash
+hash with md5, which DuckDB replays exactly. Property tests
+(tests/test_dedup_properties.py) add that exact-duplicate pairs MUST
+be found at any threshold — SURVEY.md §5.2.5.
 
 Duplicate construction: the driver corpus has no duplicate texts, so
 dedup queries run on corpus ∪ shifted-id corpus — every text then has
@@ -17,9 +18,7 @@ from pyspark.sql import functions as F
 
 from zoom_spark.dedup.embedding import cosine_neardup_pairs
 from zoom_spark.dedup.exact import dedup_exact
-from zoom_spark.dedup.minhash import minhash_dedup_pairs
 from zoom_spark.dedup.ngram import ngram_jaccard_pairs
-from zoom_spark.dedup.simhash import simhash_dedup_pairs
 from zoom_spark.io import load_table
 from zoom_spark.queries import register
 
@@ -265,8 +264,7 @@ def minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shingle signature hashes come from the Kirsch-Mitzenmacher
     two-hash family h_i = h1 + i*(h2 mod P) — exact BIGINT
     arithmetic both engines replay, two md5s per shingle instead of
-    32.  The xxhash64 operator (dedup/minhash.minhash_dedup_pairs)
-    remains the fastest Spark-only path with its property tests."""
+    32."""
     from zoom_spark.dedup.minhash import minhash_md5_dedup_pairs
 
     return minhash_md5_dedup_pairs(
@@ -489,9 +487,7 @@ def simhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-only xxhash64 to the low 60 bits of md5 (identical in both
     engines), so signatures, blocks and the verified pair set all
     value-hash; the DuckDB side computes the 60 bit votes as one
-    60-column aggregate pass (no token x bit row explosion).  The
-    64-bit xxhash64 operator (dedup/simhash.simhash_dedup_pairs)
-    remains for Spark-only callers with its property tests."""
+    60-column aggregate pass (no token x bit row explosion)."""
     from zoom_spark.dedup.simhash import simhash_md5_dedup_pairs
 
     return simhash_md5_dedup_pairs(

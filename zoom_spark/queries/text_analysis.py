@@ -132,8 +132,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting via normalized-text md5 (portable
-    across engines; the winnowing rolling-hash variant is
-    rows-only: see winnow_fingerprints)."""
+    across engines; the windowed variant is winnow_fingerprints)."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", T.fingerprint_md5("text").alias("fp_md5"))
 
@@ -262,7 +261,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-style rolling-hash fingerprints — higher-order
+    """Winnowing-style window-hash fingerprints — higher-order
     functions only, no UDF; property tests assert identical texts
     share fingerprints.  The gated output explodes the internal
     sorted-distinct hash array to scalar (doc_id, fp_hash) rows:
@@ -274,10 +273,9 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-hashed since round 9: the window hash switched from
     Spark-only xxhash64 to the low 60 bits of md5 (identical in both
-    engines), so the whole fingerprint set value-hashes; the
-    xxhash64 variant remains as functions/text.rolling_hash_
-    fingerprint for Spark-only callers (robust winnowing keeps its
-    own alignment-invariant gate)."""
+    engines), so the whole fingerprint set value-hashes
+    (functions/text.md5_window_fingerprint; robust winnowing keeps
+    its own alignment-invariant gate)."""
     from zoom_spark.io import spread_scan
 
     # spread_scan: the whole query is one map-side fingerprint fold —
