@@ -378,8 +378,11 @@ EXPECTATIONS = {
     # probe-cell join is size-planned by AQE, not forced broadcast
     "knn_ivf_fullprobe": dict(pushed=False, broadcast=False, cartesian=True),
     "hard_negative_pairs_ann": dict(pushed=False, broadcast=False, cartesian=True),
-    # round 9: the query filter now lands on the localCheckpointed
-    # quantized frame (reused across Lloyd iterations), not the scan
+    # below the size gate knn_ivf is a LocalRelation scored in numpy
+    # (no join at all); the waiver covers its distributed branch, where
+    # the centroid matrix is a 1-row broadcast crossJoin (BNLJ by
+    # design) and the query filter lands on the localCheckpointed
+    # quantized frame, not the scan
     "knn_ivf": dict(pushed=False, broadcast=False, cartesian=True),
     "simhash_dedup_docs": dict(pushed=False, broadcast=False, cartesian=False),
     "ngram_jaccard_dups": dict(pushed=False, broadcast=False, cartesian=False),
@@ -469,7 +472,9 @@ EXPECTATIONS = {
     # candidate set broadcasts into the recount; 1-row total crossJoin
     "heavy_hitter_tokens": dict(pushed=False, broadcast=True, cartesian=True),
     # k-means centroid matrix is a 1-row broadcast crossJoin per Lloyd
-    # iteration (BNLJ by design — similarity/kmeans._assign)
+    # iteration (BNLJ by design — similarity/kmeans.int_assign); for
+    # kmeans_corpus_cells only on its distributed branch, since below
+    # the size gate it is a LocalRelation of numpy-assigned counts
     "semdedup_corpus": dict(pushed=False, broadcast=False, cartesian=True),
     "kmeans_corpus_cells": dict(pushed=False, broadcast=False, cartesian=True),
     "pca_project_corpus": dict(pushed=False, broadcast=False, cartesian=False),

@@ -227,19 +227,24 @@ def test_ivf_partial_probe_recall(spark):
     bf = knn_bruteforce(spark, SF_DIR).select(
         "q_id", "neighbor_id", F.col("cosine_sim").alias("bf_sim")
     )
+    # unpersisted at the end: knn_ivf's local branch is a LocalRelation,
+    # and a later build of the same rows would otherwise read this cache
     ivf = knn_ivf(spark, SF_DIR).cache()
-    hits = ivf.join(bf, on=["q_id", "neighbor_id"])
-    recall = hits.count() / bf.count()
-    assert recall >= 0.3, f"IVF recall@5 too low: {recall:.2f}"
-    # knn_ivf computes cosine on the 1e-6-quantized vectors (the
-    # round-9 integer-exact oracle contract), so its sims sit within
-    # one quantization step + snap grid of the float brute force
-    assert (
-        hits.where(
-            F.abs(F.col("cosine_sim") - F.col("bf_sim")) > 3e-6
-        ).count()
-        == 0
-    )
+    try:
+        hits = ivf.join(bf, on=["q_id", "neighbor_id"])
+        recall = hits.count() / bf.count()
+        assert recall >= 0.3, f"IVF recall@5 too low: {recall:.2f}"
+        # knn_ivf computes cosine on the 1e-6-quantized vectors (the
+        # round-9 integer-exact oracle contract), so its sims sit within
+        # one quantization step + snap grid of the float brute force
+        assert (
+            hits.where(
+                F.abs(F.col("cosine_sim") - F.col("bf_sim")) > 3e-6
+            ).count()
+            == 0
+        )
+    finally:
+        ivf.unpersist()
 
 
 def test_connected_components_merges_chains(spark):
@@ -358,18 +363,29 @@ def test_weighted_minhash_captures_all_clones(spark, n_docs):
 
 def test_weighted_signature_scale_invariance(spark):
     """doc||doc doubles every term weight; the exponential-race
-    signature must be identical (scores all scale by 1/2)."""
-    from zoom_spark.dedup.weighted_minhash import weighted_signature_df
+    signature must be identical (scores all scale by 1/2). Signatures
+    are built as weighted_minhash_dedup_pairs builds them: the
+    signature fold over the term_freqs array column."""
+    from zoom_spark.dedup.weighted_minhash import (
+        term_freqs,
+        weighted_minhash_signature,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     doubled = docs.select(
         "doc_id", F.concat_ws(" ", "text", "text").alias("text")
     )
-    s1 = weighted_signature_df(docs, "text", "doc_id", num_hashes=16)
-    s2 = weighted_signature_df(doubled, "text", "doc_id", num_hashes=16)
-    j = s1.join(
-        s2.withColumnRenamed("sig", "sig2"), on="id"
+
+    def signatures(d):
+        return d.select("doc_id", term_freqs("text").alias("tfa")).select(
+            F.col("doc_id").alias("id"),
+            weighted_minhash_signature(F.col("tfa"), 16).alias("sig"),
+        )
+
+    j = signatures(docs).join(
+        signatures(doubled).withColumnRenamed("sig", "sig2"), on="id"
     )
+    assert j.count() == 50
     assert j.where(F.col("sig") != F.col("sig2")).count() == 0
 
 

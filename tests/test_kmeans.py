@@ -77,12 +77,15 @@ def test_int_dot_plans_same_result_as_inline_fold(spark, monkeypatch, name):
     """A query built through kmeans.int_dot optimizes to a plan with
     the same result as one built with the inline fold. Local
     checkpoints are left out of both builds: each would be a fresh
-    RDD, and two RDD scans never compare equal."""
+    RDD, and two RDD scans never compare equal. The budget is 0
+    because below it knn_ivf scores in numpy and reaches no int_dot."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     import zoom_spark.similarity.kmeans as km
+    from zoom_spark.operators import sizing
     from zoom_spark.queries import round10_ops, similarity_queries
 
+    monkeypatch.setattr(sizing, "LOCAL_BYTES", 0)
     query = getattr(similarity_queries, name, None) or getattr(round10_ops, name)
     monkeypatch.setattr(
         ClassicDataFrame, "localCheckpoint", lambda self, eager=True: self

@@ -22,6 +22,7 @@ from zoom_spark.similarity import kmeans
 
 GATED_QUERIES = [
     "kmeans_corpus_cells",
+    "knn_ivf",
     "knn_pq_adc",
     "knn_ivfpq",
     "logreg_purchase_model",
@@ -119,3 +120,131 @@ def test_k_truss_rejects_ids_outside_packed_range(spark, bad_id):
     )
     with pytest.raises(ValueError, match=r"\[0, 2\^31\)"):
         k_truss(edges, k=3)
+
+
+# Cross-polytope centroids in md5 seed order: cell 0 is +e1, 1 is -e1,
+# 2 is +e2, 3 is -e2, 4-7 are +-e3 and +-e4. Cell 2 holds its seed
+# alone, cells 1 and 4-7 three copies each. The other vectors come in
+# pairs mirrored about their centroid, so every Lloyd round returns
+# the seeds.
+_AXES = [
+    (1, 0, 0, 0), (-1, 0, 0, 0), (0, 1, 0, 0), (0, -1, 0, 0),
+    (0, 0, 1, 0), (0, 0, -1, 0), (0, 0, 0, 1), (0, 0, 0, -1),
+]
+# Query q probes cells 0 and 2, then cells 4-7 tie on the third slot
+# and the lowest id (4) wins; q' mirrors q about +e1.
+_PROBE_TIE = [(0.75, 0.25, 0, 0), (1.25, -0.25, 0, 0)]
+# Scores equal against cells 3 and 5, so it joins cell 3; with its
+# mirror about -e2.
+_EQUIDISTANT = [(0, -0.5, -0.5, 0), (0, -1.5, 0.5, 0)]
+# Ties all eight cells (so joins cell 0) and has norm 0; with its
+# mirror about +e1.
+_ZERO = [(0, 0, 0, 0), (2, 0, 0, 0)]
+
+
+def _write_embeddings(path, with_zero: bool) -> dict[int, tuple]:
+    """Writes the synthetic ``embeddings.parquet`` and returns its
+    vectors by id. The first vector of ``_PROBE_TIE`` and the zero
+    vector get ids below 20, so they are among the queries."""
+    queries = [_PROBE_TIE[0], *_ZERO[:with_zero]]
+    others = [
+        *(_AXES[c] for c in (1, 3, 4, 5, 6, 7) for _ in range(2)),
+        _PROBE_TIE[1], *_EQUIDISTANT, *_ZERO[1:1 + with_zero],
+    ]
+    ids = list(range(8 + len(queries) + len(others)))
+    seeds = [ids[i] for i in kmeans.md5_seed_order(ids)[:8]]
+    rest = [i for i in ids if i not in seeds]
+    assert rest[len(queries) - 1] < 20
+    rows = dict(zip(seeds + rest, [*_AXES, *queries, *others]))
+    pd.DataFrame({
+        "vec_id": pd.Series(list(rows), dtype="int64"),
+        "embedding": [[float(x) for x in v] for v in rows.values()],
+        "label": pd.Series([0] * len(rows), dtype="int32"),
+    }).to_parquet(path / "embeddings.parquet")
+    return rows
+
+
+def _both_branches(spark, monkeypatch, sf_dir, name):
+    """Sorted rows of the local branch, then of the distributed one;
+    the local plan must be join-free and the distributed one not."""
+    runs = []
+    for budget in (sizing.LOCAL_BYTES, 0):
+        with monkeypatch.context() as m:
+            m.setattr(sizing, "LOCAL_BYTES", budget)
+            kmeans._LLOYD_FIT_CACHE.clear()
+            df = Q.QUERIES[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert ("Join" in plan) == (budget == 0)
+            runs.append(sorted(df.collect(), key=repr))
+    return runs
+
+
+def test_ivf_ties_match_across_branches(spark, monkeypatch, tmp_path):
+    """The assignment tie (a vector equidistant from cells 3 and 5
+    joins cell 3), the probe tie (four cells for q's third probe,
+    cell 4 wins) and the cosine tie (copies of +e3, ranked by
+    neighbor_id) come out the same down both branches."""
+    rows = _write_embeddings(tmp_path, with_zero=False)
+    local, dist = _both_branches(spark, monkeypatch, str(tmp_path), "kmeans_corpus_cells")
+    assert local == dist
+    assert [tuple(r) for r in local] == [
+        (0, 3), (1, 3), (2, 1), (3, 5), (4, 3), (5, 3), (6, 3), (7, 3),
+    ]
+    local, dist = _both_branches(spark, monkeypatch, str(tmp_path), "knn_ivf")
+    assert local == dist
+    assert len({r.q_id for r in local}) == 20
+    q = next(i for i, v in rows.items() if v == _PROBE_TIE[0])
+    nbrs = [r.neighbor_id for r in sorted(local, key=lambda r: r.rnk) if r.q_id == q]
+    by_vec = {v: i for i, v in rows.items()}
+    e3 = sorted(i for i, v in rows.items() if v == _AXES[4])
+    assert nbrs == [by_vec[_AXES[0]], by_vec[_PROBE_TIE[1]], by_vec[_AXES[2]], *e3[:2]]
+
+
+def test_ivf_zero_norm_matches_across_branches(spark, monkeypatch, tmp_path):
+    """A zero vector's cosine divides by zero: under ANSI both branches
+    raise DIVIDE_BY_ZERO, without it both return NULL similarities,
+    ranked last and then by neighbor_id."""
+    from pyspark.errors import ArithmeticException
+
+    rows = _write_embeddings(tmp_path, with_zero=True)
+    sf_dir = str(tmp_path)
+    for budget in (sizing.LOCAL_BYTES, 0):
+        with monkeypatch.context() as m:
+            m.setattr(sizing, "LOCAL_BYTES", budget)
+            kmeans._LLOYD_FIT_CACHE.clear()
+            with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+                Q.QUERIES["knn_ivf"](spark, sf_dir).collect()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        local, dist = _both_branches(spark, monkeypatch, sf_dir, "knn_ivf")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert local == dist
+    zero = next(i for i, v in rows.items() if v == _ZERO[0])
+    zero_rows = sorted((r for r in local if r.q_id == zero), key=lambda r: r.rnk)
+    assert [r.cosine_sim for r in zero_rows] == [None] * 5
+    nbrs = [r.neighbor_id for r in zero_rows]
+    assert nbrs == sorted(nbrs)
+
+
+@pytest.mark.parametrize("name", ["knn_ivf", "kmeans_corpus_cells"])
+def test_ivf_local_branch_job_count(spark, name):
+    """Below the budget, a cold build and collect runs 4 Spark jobs:
+    the parquet schema read, the gate's count (its aggregate and the
+    shuffle stage under it), and the one Arrow collect; the fit and
+    every score after it are numpy, and the LocalRelation result
+    collects without a job. The distributed plans ran 11 (knn_ivf)
+    and 7 (kmeans_corpus_cells)."""
+    import uuid
+
+    kmeans._LLOYD_FIT_CACHE.clear()
+    sc = spark.sparkContext
+    group = f"ivf-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{name} job count")
+    try:
+        assert Q.QUERIES[name](spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4

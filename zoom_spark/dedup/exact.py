@@ -33,12 +33,3 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .select(F.col("__fp").alias("fingerprint"), "canonical_id", "n_copies")
     )
 
-
-def drop_exact_dupes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep only the canonical row per distinct text — the actual
-    corpus-pruning operator. Window-free formulation: semi-join on
-    (fingerprint, min id) so the heavy text column never shuffles."""
-    canon = dedup_exact(df, text_col, id_col).select(
-        F.col("canonical_id").alias(id_col)
-    )
-    return df.join(canon, on=id_col, how="left_semi")

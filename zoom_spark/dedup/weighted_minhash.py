@@ -136,22 +136,6 @@ def weighted_minhash_signature(tf_arr, num_hashes: int = 32):
     return F.transform(folded, lambda x: x["t"])
 
 
-def weighted_signature_df(
-    df: DataFrame, text_col: str, id_col: str, *, num_hashes: int = 32
-) -> DataFrame:
-    """(id, sig: array<long>) materialized behind an exchange barrier
-    (see minhash.minhash_md5_dedup_pairs for why: CollapseProject
-    would otherwise re-inline the K-wide fold into every band
-    consumer). r13: input spread before the fold (single-split
-    fixture scans would otherwise serialize it on one task)."""
-    return spread_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    ).select(
-        "id",
-        weighted_minhash_signature(term_freqs("__text"), num_hashes).alias("sig"),
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def _band_rows(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     rows = num_hashes // bands
     bands_arr = F.array(
@@ -205,7 +189,8 @@ def exact_weighted_jaccard(pairs: DataFrame, tf: DataFrame) -> DataFrame:
 
 def term_freq_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, term, w) exploded long-form term frequencies. r13: input
-    spread before the sort+RLE fold (see weighted_signature_df)."""
+    spread before the sort+RLE fold (single-split fixture scans would
+    otherwise serialize it on one task)."""
     return spread_scan(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     ).select(

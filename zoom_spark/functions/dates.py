@@ -8,15 +8,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-ISO_OFFSET_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
-
-
-def parse_iso_ts(col: Column | str) -> Column:
-    """F1 — ISO-8601-with-offset parse, the Spark form of
-    strptime('%Y-%m-%dT%H:%M:%S%z') (/root/reference/main.py:263-265)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_timestamp(c, ISO_OFFSET_FMT)
-
 
 def school_year_start(d: Column | str) -> Column:
     """F5 — fiscal/school-year floor: Aug 1 of the current year when

@@ -19,7 +19,7 @@ driver-side key lists) so nothing materializes on the driver at scale
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -94,10 +94,3 @@ def load_incremental(
     write_idempotent_partition(delta, sink_path, partition_col)
     return delta
 
-
-def guard_caught_up(watermark: Column, today: Column | None = None) -> Column:
-    """P8 scalar guard: True when the watermark has caught up to today
-    (/root/reference/main.py:213-215) — expressed as a column predicate
-    so it can gate a load inside the plan rather than on the driver."""
-    t = today if today is not None else F.current_date()
-    return watermark >= t

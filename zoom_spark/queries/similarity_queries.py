@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -366,11 +368,59 @@ def _knn_ivf_oracle_sql() -> str:
     )
 
 
+def _knn_ivf_local(
+    spark: SparkSession, ids: np.ndarray, X: np.ndarray, cents
+) -> DataFrame:
+    """knn_ivf's distributed plan replayed in numpy over the collected
+    base, value for value: int64 dots and scores are exact, probe
+    lists order by (score, cell), sqrt and the one division are IEEE
+    correctly rounded, and the top-5 orders by (cosine_sim desc nulls
+    last, neighbor_id). A zero norm makes the distributed division
+    fail under ANSI and NULL without it; so does this replay."""
+    from pyspark.errors import ArithmeticException
+
+    from zoom_spark.similarity.kmeans import cell_scores, nearest_cell
+
+    C = np.asarray([c for _, c in cents], dtype=np.int64)
+    qpos = np.flatnonzero(ids < N_QUERIES)
+    # cents are in cell-id order, so a stable sort on the score keeps
+    # tied cells lowest id first
+    probes = np.argsort(cell_scores(X[qpos], C), axis=1, kind="stable")
+    probed = np.zeros((len(qpos), len(C)), dtype=bool)
+    np.put_along_axis(probed, probes[:, :IVF_PROBE], True, axis=1)
+    # (query row, candidate) pairs: every vector of a probed cell but
+    # the query itself, in query-row order
+    r, j = np.nonzero(
+        probed[:, nearest_cell(X, C)] & (ids != ids[qpos][:, None])
+    )
+    nrm = np.sqrt((X * X).sum(axis=1).astype(np.float64))
+    den = nrm[qpos][r] * nrm[j]
+    null = den == 0
+    if null.any() and spark.conf.get("spark.sql.ansi.enabled").lower() == "true":
+        raise ArithmeticException(
+            "[DIVIDE_BY_ZERO] Division by zero in knn_ivf's cosine: "
+            "a vector has norm 0."
+        )
+    dot = (X[qpos] @ X.T)[r, j].astype(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = np.floor(dot / den * 1e6 + 0.5) / 1e6
+    order = np.lexsort((ids[j], -np.where(null, 0.0, sim), null, r))
+    r, j, sim, null = r[order], j[order], sim[order], null[order]
+    rnk = np.arange(len(r)) - np.searchsorted(r, r) + 1
+    top = rnk <= 5
+    return local_frame(spark, pa.table({
+        "q_id": pa.array(ids[qpos][r[top]], pa.int64()),
+        "neighbor_id": pa.array(ids[j[top]], pa.int64()),
+        "cosine_sim": pa.array(sim[top], pa.float64(), mask=null[top]),
+        "rnk": pa.array(rnk[top], pa.int64()),
+    }))
+
+
 @register("knn_ivf", sql=_knn_ivf_oracle_sql())
 def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 scale path #2: IVF-flat at the PRODUCTION shape — coarse-
-    quantizer cells, map-side corpus assignment, n_probe = 3 of 8
-    cells probed per query (recall < 1 by contract).
+    quantizer cells, corpus assignment, n_probe = 3 of 8 cells probed
+    per query (recall < 1 by contract).
 
     Oracle-hashed since round 9 via the INTEGER-QUANTIZED pipeline
     (SQ + IVF — a real production ANN configuration): vectors snap
@@ -383,7 +433,15 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-deterministic, so the approximate result value-hashes even
     though recall < 1.  The float general operator (similarity/
     ivf.ivf_topk) keeps its recall property tests; knn_ivf_fullprobe
-    keeps hashing the n_probe == n_centroids exact boundary."""
+    keeps hashing the n_probe == n_centroids exact boundary.
+
+    Two branches, one result. When the quantized base fits the local
+    budget it is collected once (kmeans.local_base); the fit,
+    assignment, probe ranking and top-5 then run in numpy
+    (_knn_ivf_local) and the rows come back as a LocalRelation.
+    Above the budget, assignment is a map-side fold against a one-row
+    broadcast centroid matrix and the probe lists and top-5 are
+    row_number windows."""
     from pyspark.sql import Window
 
     from zoom_spark.similarity.kmeans import (
@@ -393,16 +451,21 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
+        local_base,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = int_quantize(
         emb, "embedding", "vec_id", IVF_QSCALE
     ).localCheckpoint(eager=False)
+    local = local_base(base)
     cents = int_lloyd_fit(
         base, k=IVF_K, iters=IVF_ITERS,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", IVF_QSCALE),
+        local=local,
     )
+    if local is not None:
+        return _knn_ivf_local(spark, *local, cents)
     nv = int_assign(base, cents).select(
         "id",
         "cell",
@@ -527,10 +590,8 @@ def _kmeans_oracle_sql() -> str:
 
 @register("kmeans_corpus_cells", sql=_kmeans_oracle_sql())
 def kmeans_corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 distributed Lloyd's k-means (k=8, 3 iterations) over the
-    embedding corpus; returns per-cluster sizes. M-step is the
-    two-phase partial-sum reduction (see similarity/kmeans.py) —
-    only K·partitions tiny rows ever shuffle.
+    """X3 Lloyd's k-means (k=8, 3 iterations) over the embedding
+    corpus; returns the size of every non-empty cell.
 
     Oracle-hashed since round 9 via the INTEGER-QUANTIZED Lloyd
     replay: inputs snap once to the 1e-6 grid (scalar quantization —
@@ -542,22 +603,41 @@ def kmeans_corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap schedule at all.  The DuckDB side unrolls the 3 rounds as
     materialized CTEs; argmin ties break to the lowest cell id on
     both sides.  Property referees (inertia monotone, planted-
-    cluster recovery) stay in tests/."""
+    cluster recovery) stay in tests/.
+
+    When the quantized base fits the local budget it is collected
+    once (kmeans.local_base), and the fit and the final assignment
+    run in numpy (kmeans.nearest_cell); the counts come back as a
+    LocalRelation. Above the budget the fit runs distributed Lloyd
+    rounds and the final assignment is int_assign's map-side fold
+    plus a groupBy."""
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_lloyd_fit,
         int_quantize,
         lloyd_cache_key,
+        local_base,
+        nearest_cell,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = int_quantize(
         emb, "embedding", "vec_id", KMEANS_QSCALE
     ).localCheckpoint(eager=False)
+    local = local_base(base)
     cents = int_lloyd_fit(
         base, k=KMEANS_K, iters=KMEANS_ITERS,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", KMEANS_QSCALE),
+        local=local,
     )
+    if local is not None:
+        C = np.asarray([c for _, c in cents], dtype=np.int64)
+        cid = np.asarray([c for c, _ in cents], dtype=np.int32)
+        cell, n = np.unique(cid[nearest_cell(local[1], C)], return_counts=True)
+        return local_frame(spark, pa.table({
+            "cell": pa.array(cell, pa.int32()),
+            "n_vectors": pa.array(n, pa.int64()),
+        }))
     return (
         int_assign(base, cents)
         .groupBy("cell")

@@ -294,20 +294,47 @@ def int_matrix(col) -> np.ndarray:
     return flat.reshape(len(col), int(lens[0]) if len(lens) else 0)
 
 
+def cell_scores(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(rows, cells) exact int64 L2 scores -2·x·c + ||c||² of the rows
+    of X against the centroid rows of C: the distributed folds'
+    score_j, minus the ||x||² that no argmin over cells needs."""
+    return -2 * (X @ C.T) + (C * C).sum(axis=1)
+
+
+def nearest_cell(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Position in C of each row's nearest centroid. np.argmin takes
+    the FIRST minimum, so with C in cell-id order ties break to the
+    lowest cell id, as in int_assign."""
+    return np.argmin(cell_scores(X, C), axis=1)
+
+
+def local_base(base: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
+    """``(ids, X)`` of an int_quantize frame on the driver, or None
+    when it is above the local budget. One job reads the row count
+    and the widest vector (an (id, vec) row is 8 + 8·dim bytes);
+    below the budget ONE Arrow collect brings the frame over, the
+    ids as an array and the vectors as an int64 matrix."""
+    from zoom_spark.operators.sizing import fits
+
+    n_rows, dim = base.agg(F.count("*"), F.max(F.size("vec"))).first()
+    if not fits(n_rows, 8 + 8 * (dim or 0)):
+        return None
+    t = base.select("id", "vec").toArrow()
+    return t.column("id").to_numpy(), int_matrix(t.column("vec"))
+
+
 def int_lloyd_local(
     X: np.ndarray, cents: list[tuple[int, list[int]]], iters: int
 ) -> list[tuple[int, list[int]]]:
     """Driver-local replay of the distributed int-Lloyd loop
     (int_assign + _int_mstep_means) over an int64 matrix, from seed
     centroids sorted by cell id. Bitwise identical: int64 dots/norms
-    are exact, np.argmin takes the FIRST minimum (the lowest-cell-id
-    tie-break), the M-step divides the exact int sum by the count in
-    the same IEEE double division before the shared floor(m + 0.5)
-    snap, and empty cells drop without relabeling."""
+    are exact, nearest_cell breaks ties to the lowest cell id, the
+    M-step divides the exact int sum by the count in the same IEEE
+    double division before the shared floor(m + 0.5) snap, and empty
+    cells drop without relabeling."""
     for _ in range(iters):
-        C = np.asarray([c for _, c in cents], dtype=np.int64)
-        scores = -2 * (X @ C.T) + (C * C).sum(axis=1)
-        idx = np.argmin(scores, axis=1)
+        idx = nearest_cell(X, np.asarray([c for _, c in cents], dtype=np.int64))
         new: dict[int, list[int]] = {}
         for j, (cid, _) in enumerate(cents):
             mask = idx == j
@@ -327,6 +354,7 @@ def int_lloyd_fit(
     iters: int,
     seed_order_col: str = "id",
     cache_key: tuple | None = None,
+    local: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> list[tuple[int, list[int]]]:
     """Integer-exact Lloyd fit over an int_quantize frame: md5-seeded
     (the k smallest md5(id) vectors, reproducible in ANSI SQL unlike
@@ -337,8 +365,12 @@ def int_lloyd_fit(
 
     ``cache_key``: optional caller-supplied identity of the INPUT DATA
     (plus any quantization params); when given, the fit is memoized in
-    _LLOYD_FIT_CACHE under (cache_key, k, iters, seed_order_col)."""
-    from zoom_spark.operators.sizing import fits, frame_partitions
+    _LLOYD_FIT_CACHE under (cache_key, k, iters, seed_order_col).
+
+    ``local``: the frame's :func:`local_base`, for a caller that
+    collected it already; without it the fit gates and collects
+    itself."""
+    from zoom_spark.operators.sizing import frame_partitions
 
     memo_key = None
     if cache_key is not None:
@@ -347,24 +379,22 @@ def int_lloyd_fit(
         if hit is not None:
             return hit
 
-    # One job reads the row count (it sizes the working frame) and the
-    # widest vector: an (id, vec) row is 8 + 8·dim bytes.
-    n_rows, dim = base.agg(F.count("*"), F.max(F.size("vec"))).first()
-    if seed_order_col == "id" and fits(n_rows, 8 + 8 * (dim or 0)):
-        # r14: a model-sized quantized base trains faster with ONE
-        # Arrow collect + numpy than with iters sequential Spark jobs
-        # (each job was ~1.2 s of scheduler + interpreted-HOF latency
-        # on a 2000-row frame at sf0.1). Same seeds, same arithmetic:
-        # see int_lloyd_local.
-        t = base.select("id", "vec").toArrow()
-        ids = t.column("id").to_pylist()
-        X = int_matrix(t.column("vec"))
-        order = md5_seed_order(ids)
-        seeds = [(j, [int(x) for x in X[i]]) for j, i in enumerate(order[:k])]
-        cents = int_lloyd_local(X, seeds, iters)
-        if memo_key is not None:
-            _LLOYD_FIT_CACHE[memo_key] = cents
-        return cents
+    if seed_order_col == "id":
+        if local is None:
+            local = local_base(base)
+        if local is not None:
+            # r14: a model-sized quantized base trains faster with ONE
+            # Arrow collect + numpy than with iters sequential Spark
+            # jobs (each job was ~1.2 s of scheduler + interpreted-HOF
+            # latency on a 2000-row frame at sf0.1). Same seeds, same
+            # arithmetic: see int_lloyd_local.
+            ids, X = local
+            order = md5_seed_order(ids.tolist())
+            seeds = [(j, [int(x) for x in X[i]]) for j, i in enumerate(order[:k])]
+            cents = int_lloyd_local(X, seeds, iters)
+            if memo_key is not None:
+                _LLOYD_FIT_CACHE[memo_key] = cents
+            return cents
     # Frame-sized iteration partitions: each Lloyd round runs a
     # mapInPandas partial per partition, so 32 near-empty partitions
     # cost 32 Python-worker batches per round.  coalesce never raises
@@ -372,6 +402,7 @@ def int_lloyd_fit(
     # result is bitwise independent of the partitioning (2.5x faster
     # at test SF, identical centroids).
     sc = base.sparkSession.sparkContext
+    n_rows = base.count()
     work = base.coalesce(frame_partitions(sc, n_rows, target_rows_per_task=20_000))
 
     seed_rows = (
